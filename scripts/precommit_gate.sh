@@ -30,7 +30,7 @@ fi
 
 out=$(mktemp -d /tmp/graft_gate.XXXXXX)
 echo "[gate] oracle parity at sf0.001 (output: $out)"
-if ! SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
+if ! SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
     sbt -batch "runMain graft.Verify $sf_dir $out" > "$out/verify.log" 2>&1; then
   echo "[gate] Verify FAILED — tail of $out/verify.log:"
   tail -20 "$out/verify.log"

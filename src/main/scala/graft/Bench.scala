@@ -53,7 +53,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = Sessions.envCpus
     val spark = Sessions.local(cpus)
 
     // Warmup: one trivial job + touch every table's footer/schema +
@@ -98,8 +98,8 @@ object Bench {
     // SCAN-SHAPED Spark job through the same session: read a real
     // table from the SF dir, two-level agg, one shuffle — the same
     // bottleneck mix (IO/page cache + codegen + scheduler) as the
-    // workload. Shape was MEASURED, not guessed (DevProbeLab, r17
-    // A/B, 32 spinners vs local[16]): queries inflate ~3.5x, this
+    // workload. Shape was MEASURED, not guessed (PLANS.md "the probe
+    // A/B", r17, 32 spinners vs local[16]): queries inflate ~3.5x, this
     // scan probe 4.4x, the scalar cal 8.6x, synthetic range->agg
     // probes 13-15x — pure-CPU reference jobs over-respond to load
     // because fixed scheduling costs dominate them. The probe is the

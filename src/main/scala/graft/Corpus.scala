@@ -245,7 +245,7 @@ object Corpus {
     // stage 4: language — row-local flag on repetition survivors.
     //
     // The stage-1..4 frame is materialized ONCE (round 15 —
-    // CurateProfile measurement, PLANS.md): every downstream branch
+    // `Probe stages` measurement, PLANS.md): every downstream branch
     // (the LM token frame, the exact-dedup keep set, the near-dup
     // band/shingle frames, decontamination's corpus side, the sampler
     // counts, the budget window, and the final ledger pass) otherwise
@@ -522,7 +522,7 @@ object Corpus {
     tokenBudgetPerSource = Some(E2e.BudgetPerSource))
 
   /** e2e_curate's curate run, pre-ledger — exposed for the dev-only
-    * stage profiler ([[CurateProfile]]), which times cumulative
+    * stage profiler (`Probe stages`), which times cumulative
     * flag-column cuts of `flagged` to attribute wall-clock per stage. */
   private[graft] def e2eResult(s: org.apache.spark.sql.SparkSession, dir: String): Result = {
     val docs = Tables.documents(s, dir)

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * Prints one `DRILL <mode> branch2=COMPLETED|FAILED <detail>` line;
   * the round's PLANS.md records the rehearsal transcript. Not part of
   * the CI suite: local-cluster spawns worker JVMs (~20 s, needs
-  * SPARK_HOME) — a dev main like DevD17Profile, not a spec.
+  * SPARK_HOME) — a dev main, not a spec.
   */
 object FaultDrill {
   def main(args: Array[String]): Unit = {

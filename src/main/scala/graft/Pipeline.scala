@@ -268,10 +268,12 @@ object Pipeline {
       .setOutputCol("features").setHandleInvalid("keep")
     val trainA = asm.transform(trainBalanced).cache()
     val testA = asm.transform(testS).cache()
-    // materialize the shared train cache ONCE before the concurrent
-    // family searches below — three families racing on a cold cache
-    // would each recompute the assemble/scale pipeline per partition
+    // materialize the shared train and test caches ONCE before the
+    // concurrent family searches below — three families racing on a
+    // cold cache would each recompute the assemble/scale pipeline per
+    // partition
     trainA.count(): Unit
+    testA.count(): Unit
 
     // Classification metrics (main.py:303-318): accuracy + WEIGHTED
     // precision/recall/F1 from the O(classes²) confusion counts — one
@@ -356,21 +358,13 @@ object Pipeline {
         importances: Seq[(String, Double)], save: String => Unit)
     // The model FAMILIES are independent of each other (each gridSearch
     // fits and scores on the same cached splits with its own seed), so
-    // their CV searches run CONCURRENTLY from a small thread pool
-    // (optimization guide §2.6 "overlap independent jobs"): an MLlib
-    // fit is a long chain of small jobs whose tails leave most
-    // executors idle — the next family's tasks back-fill them. Wall
-    // measured 2.3x faster on the reference-parity spec frames; every
-    // family's result is bit-identical to the sequential run (fixed
-    // seeds, per-family isolation — only SCHEDULING overlaps).
-    def inParallel(thunks: Seq[() => Fitted]): Seq[Fitted] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(thunks.map(t => Future(t()))), Duration.Inf)
-      finally pool.shutdown()
-    }
+    // their CV searches run CONCURRENTLY ([[inParallel]]; optimization
+    // guide §2.6 "overlap independent jobs"): an MLlib fit is a long
+    // chain of small jobs whose tails leave most executors idle — the
+    // next family's tasks back-fill them. Wall measured 2.3x faster on
+    // the reference-parity spec frames; every family's result is
+    // bit-identical to the sequential run (fixed seeds, per-family
+    // isolation — only SCHEDULING overlaps).
     val candidates: Seq[Fitted] =
       if (task == "classification") {
         // MulticlassClassificationEvaluator's "f1" IS weighted F1 —
@@ -407,7 +401,7 @@ object Pipeline {
           Fitted("GradientBoosting", clsMetrics(gbt.transform(testA)) ++ cvInfo,
             featureCols.zip(gbt.featureImportances.toArray), d => gbt.write.overwrite().save(d))
         }) else None // GBTClassifier is binary-only
-        inParallel(Seq(rfT, lrT) ++ gbtT)
+        inParallel(df.sparkSession, Seq(rfT, lrT) ++ gbtT)
       } else {
         val re = new RegressionEvaluator().setLabelCol(target).setMetricName("mse")
         val rfT = () => {
@@ -444,7 +438,7 @@ object Pipeline {
             normalizedCoefs(featureCols, lin.coefficients.toArray),
             d => lin.write.overwrite().save(d))
         }
-        inParallel(Seq(rfT, gbtT, linT))
+        inParallel(df.sparkSession, Seq(rfT, gbtT, linT))
       }
     val best =
       if (task == "classification") candidates.maxBy(_.metrics("weighted_f1"))
@@ -459,6 +453,39 @@ object Pipeline {
     Result(cleaned, train, test, task, best.metrics ++ extra, featureCols,
       best.importances.sortBy(-_._2), path,
       best.name, candidates.map(c => c.name -> c.metrics).toMap)
+  }
+
+  /** Runs independent thunks concurrently, each under its own Spark job
+    * group. When one throws, the other groups' running and future jobs
+    * are cancelled and every thunk is awaited before the first failure
+    * is rethrown, so no sibling is still submitting Spark jobs once the
+    * call returns. */
+  private[graft] def inParallel[A](spark: org.apache.spark.sql.SparkSession,
+      thunks: Seq[() => A]): Seq[A] = {
+    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+    import scala.concurrent.duration.Duration
+    val sc = spark.sparkContext
+    val run = java.util.UUID.randomUUID()
+    val groups = thunks.indices.map(i => s"graft-inParallel-$run-$i")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val futures = thunks.zip(groups).map { case (t, g) =>
+      Future {
+        sc.setJobGroup(g, "graft.Pipeline.inParallel", interruptOnCancel = true)
+        try t() finally sc.clearJobGroup()
+      }
+    }
+    // completes with the first failure, or with every result
+    val first = Promise[Seq[A]]()
+    futures.foreach(_.failed.foreach(first.tryFailure)(ExecutionContext.parasitic))
+    Future.sequence(futures).foreach(first.trySuccess)(ExecutionContext.parasitic)
+    try Await.result(first.future, Duration.Inf)
+    catch {
+      case e: Throwable =>
+        groups.foreach(sc.cancelJobGroupAndFutureJobs)
+        futures.foreach(Await.ready(_, Duration.Inf))
+        throw e
+    } finally pool.shutdown()
   }
 
   /** generate_visualizations (main.py:134-189) as DATA, generic over

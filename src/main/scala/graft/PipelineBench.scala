@@ -11,7 +11,7 @@ package graft
 object PipelineBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.envCpus
     val spark = Sessions.local(cpus)
     // warmup: footer + trivial job (Bench's rationale)
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -4,25 +4,18 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
-/** Dev-only LINEAGE-RE-EXECUTION audit (round 15). The count()-elision
-  * audit of round 14 found plans that did too little; this finds plans
-  * that do too much: a registered key whose physical plan scans the
-  * SAME parquet table many times is usually re-executing a shared
-  * upstream frame once per consumer branch (the e2e_curate/d6/d19
-  * disease — fixed by one localCheckpoint at the shared frontier).
-  * Not every multi-scan is a defect (self-joins, two genuinely
-  * different column/filter sets are fine) — this prints the facts so
-  * the judgement call is explicit, keyed by SURVEY name.
-  *
-  * Usage: runMain graft.ScanAudit [sfDir] [minScans] [names...]
-  * Output: one line per (key, table) with scans ≥ minScans (default 3),
-  * sorted by scan count descending.
+/** Lineage-re-execution audit (round 15): a registered key whose
+  * physical plan scans the SAME parquet table many times is usually
+  * re-executing a shared upstream frame once per consumer branch (the
+  * e2e_curate/d6/d19 disease, fixed by one localCheckpoint at the
+  * shared frontier). `Probe scans` prints it per key; ScaleAuditSpec
+  * bounds it for the fixed keys.
   */
 object ScanAudit {
-  /** (table-ish root path, pushed-filter string) per parquet scan in
-    * the EXECUTED plan, descending into AQE stages and reused
-    * exchanges (a ReusedExchange means the scan did NOT re-run — those
-    * count separately so dedup-by-Spark shows up as such). */
+  /** (table-ish root path, reused?) per parquet scan in the EXECUTED
+    * plan, descending into AQE stages and reused exchanges (a
+    * ReusedExchange means the scan did NOT re-run — those count
+    * separately so dedup-by-Spark shows up as such). */
   private[graft] def scans(p: SparkPlan, reused: Boolean = false): Seq[(String, Boolean)] =
     p match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan, reused)
@@ -36,33 +29,4 @@ object ScanAudit {
       case other => other.children.flatMap(scans(_, reused)) ++
         other.subqueries.flatMap(scans(_, reused))
     }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val minScans = args.lift(1).map(_.toInt).getOrElse(3)
-    val names = if (args.length > 2) args.drop(2).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = Sessions.local(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    val rows = names.flatMap { n =>
-      try {
-        val df = SparkEntry.queries(n)(spark, sfDir)
-        df.queryExecution.toRdd.count() // finalize the adaptive plan
-        val all = scans(df.queryExecution.executedPlan)
-        all.groupBy(_._1).map { case (t, hits) =>
-          (n, t, hits.count(!_._2), hits.count(_._2))
-        }.filter(_._3 >= minScans)
-      } catch {
-        case e: Throwable =>
-          println(s"[scan-audit] $n FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          Seq.empty
-      }
-    }
-    rows.sortBy(-_._3).foreach { case (n, t, live, reusedN) =>
-      println(f"[scan-audit] $n%-28s $t%-22s executed=$live reused=$reusedN")
-    }
-    println(s"[scan-audit] ${rows.size} (key, table) pairs at >= $minScans executed scans")
-    spark.stop()
-  }
 }

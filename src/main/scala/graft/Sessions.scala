@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE place the engine's session tuning lives. Verify, Bench,
-  * and PlanDump used to each restate the same builder config; a user
+  * and Probe used to each restate the same builder config; a user
   * deploying the library gets the same defaults via [[local]] or can
   * graft them onto an existing builder via [[tune]].
   *
@@ -67,6 +67,11 @@ object Sessions {
     tune(b, shufflePartitions)
       .config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+
+  /** Thread count for the mains' local session: `SPARK_GRAFT_CPUS`,
+    * else every core this JVM sees. */
+  def envCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
   /** Local session with `cpus` threads — the driver-contract mains'
     * entry point (UI off: these are headless batch runs). */

@@ -18,7 +18,7 @@ object Tables {
     * group, and Spark assigns a whole row group to a single scan task
     * — so a scan stage (and all the row-local work fused into it:
     * tokenize/shingle/regex/aggregation-map building) runs on ONE
-    * core of local[N]. Measured before the fix (JobProfile, sf0.1):
+    * core of local[N]. Measured before the fix (`Probe jobs`, sf0.1):
     * q18's partial-agg job was 3.01 s of task time on one working
     * task; c1's scan+Expand ran 2.2 s single-task.
     *

@@ -8,7 +8,7 @@ object Verify {
     // dev-only query-name filter for spot-checking one operator
     // without paying for the full dump.
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = Sessions.envCpus
     val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
     val selected =

@@ -886,7 +886,7 @@ object Dedup {
     // distinct, so the collapse is the identity there.
     // base feeds every Lloyd iteration plus the final assignment —
     // checkpoint it so the scan+vector-parse runs once, not per
-    // consumer branch (ScanAudit; Config.lineageCut = ReliableCheckpoint at 100 TB).
+    // consumer branch (`Probe scans`; Config.lineageCut = ReliableCheckpoint at 100 TB).
     val (base, twinRows) = annProbes match {
       case Some(_) if collapseExact =>
         val g = baseAll.groupBy(col("embedding"))
@@ -1400,7 +1400,7 @@ object Dedup {
     val nAll = all.count() // one scalar at plan time (d17/s12's documented class)
     // base feeds the codebook sample, the exact N·k side, the ANN
     // side, and both prunings — one checkpoint pays the scan once
-    // (ScanAudit; Config.lineageCut = ReliableCheckpoint at 100 TB).
+    // (`Probe scans`; Config.lineageCut = ReliableCheckpoint at 100 TB).
     val base = (if (nAll <= cap) all else
       all.orderBy(
         pmod(pmod(pmod(col("id"), lit(P)) * 1103515245L

@@ -26,6 +26,10 @@ object MLPrep {
     * outputs are unaffected. */
   val TrainCap = 1000000L
 
+  /** m7's RF training partitions: a constant, never the core count,
+    * so its importances do not depend on the machine. */
+  val M7Partitions = 8
+
 
   // -------------------------------------------------------------------
   // m1: z-score scaling (ref main.py:244-246 StandardScaler). Sample
@@ -338,17 +342,20 @@ object MLPrep {
     import org.apache.spark.ml.feature.VectorAssembler
     import org.apache.spark.ml.regression.RandomForestRegressor
     val feats = Array("l_quantity", "l_discount", "l_tax")
-    // Tables.spread (r19, same rationale as m14): the ≤4-partition
-    // scan serialized every tree's bagging + split-finding jobs.
-    // Rows-only key (3 feature rows): RF bootstrap sampling is
-    // per-partition seeded, so importances move slightly while the
-    // output stays 3 rows × same schema.
-    val li = Tables.spread(graft.functions.Sampling.capTrainingSample(
+    // RF bootstrap sampling and split-candidate sampling are seeded per
+    // partition, so the importances follow which rows sit in which
+    // partition and in what order. Hash-partition the sample by its key
+    // to a constant count and sort each partition: the same result on
+    // any core count. (The one-row-group scan alone would also
+    // serialize every tree's bagging + split-finding jobs.)
+    val li = graft.functions.Sampling.capTrainingSample(
       Tables.lineitem(s, dir).select(
         (feats.map(col) :+ col("l_extendedprice").as("label") :+
           col("l_orderkey") :+ col("l_linenumber")).toSeq: _*),
       TrainCap, col("l_orderkey"), col("l_linenumber"))
-      .drop("l_orderkey", "l_linenumber"))
+      .repartition(M7Partitions, col("l_orderkey"), col("l_linenumber"))
+      .sortWithinPartitions("l_orderkey", "l_linenumber")
+      .drop("l_orderkey", "l_linenumber")
     val assembled = new VectorAssembler()
       .setInputCols(feats).setOutputCol("features").transform(li)
     val model = new RandomForestRegressor()

@@ -336,7 +336,7 @@ object Relational {
   // Ref: /root/reference/main.py:154-160 (describe() percentiles).
   // r18: spread the scan (Tables.spread — the testdata's one-row-group
   // file fused the whole percentile-map build into ONE task: 3.0 s of
-  // task time on one core, measured by JobProfile before the fix).
+  // task time on one core, measured by `Probe jobs` before the fix).
   def q18(s: SparkSession, dir: String): DataFrame =
     groupQuantiles(Tables.spread(Tables.lineitem(s, dir)), exact = true)
 

@@ -1258,8 +1258,9 @@ object Similarity {
     * zero-norm mean (empty-direction cell) keeps the previous
     * codeword, like an empty cell.
     *
-    * MEASURED (DevPqLab, 60 held-out queries — the registered 5-query
-    * audits are 15-slot noise, swinging 0.33-0.73 across SFs —
+    * MEASURED (PLANS.md "learned PQ", 60 held-out queries — the
+    * registered 5-query audits are 15-slot noise, swinging 0.33-0.73
+    * across SFs —
     * recall@3 at beam C=24, random-vector corpus = PQ's worst case):
     * learned-spherical at iters=2 beats the first-16 stand-in at every
     * SF — 0.556 vs 0.389 (sf0.001), 0.622 vs 0.439 (sf0.01), 0.389 vs

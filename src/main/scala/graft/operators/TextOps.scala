@@ -177,7 +177,7 @@ object TextOps {
   def t5(s: SparkSession, dir: String): DataFrame = {
     // Tables.spread: the regex redaction passes are scan-fused and the
     // one-row-group testdata pins them to a single task (two 0.7 s
-    // single-task jobs measured by JobProfile before the fix)
+    // single-task jobs measured by `Probe jobs` before the fix)
     val seeded = Tables.spread(Tables.documents(s, dir)).withColumn("t",
       concat(col("text"), lit(" contact user"), col("doc_id"),
         lit("@example.com or 555-123-"),

@@ -28,7 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Round 14 (r13 VERDICT directive 3): the rule-scan loop below
   * ([[BpeApply.countTokens]]) is O(rules · word) per word even with
   * the presence prune — at a published tokenizer's 32k-50k rules
-  * that's ~100k hash probes per WORD, measured unusable (BpeCurve).
+  * that's ~100k hash probes per WORD, measured unusable (PLANS.md,
+  * "BPE at published-tokenizer size").
   * The execution path is now the standard PAIR-RANK greedy merge
   * ([[BpeApply.countTokensRanked]]): hash each adjacent pair to its
   * rule rank, merge the best (lowest) rank first, repeat — per-word

@@ -38,6 +38,45 @@ class PipelineSpec extends SparkSuite {
     assert(r.modelMetrics(r.bestModel)("mse") === r.modelMetrics.values.map(_("mse")).min)
   }
 
+  test("inParallel: a failing thunk cancels its sibling's Spark jobs before rethrowing") {
+    val sc = spark.sparkContext
+    val tracker = sc.statusTracker
+    @volatile var group: String = null
+    @volatile var siblingDone = false
+    def running(g: String): Seq[Int] = tracker.getJobIdsForGroup(g).toSeq.filter(id =>
+      tracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+    def waitFor(what: String)(cond: => Boolean): Unit = {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!cond) {
+        assert(System.nanoTime() < deadline, s"timed out waiting for $what")
+        Thread.sleep(20)
+      }
+    }
+    val sibling = () => {
+      group = sc.getLocalProperty("spark.jobGroup.id")
+      // many minutes of work unless cancelled
+      try spark.range(0L, 1L << 42, 1, 4).selectExpr("sum(id % 7)").collect().length
+      finally siblingDone = true
+    }
+    val failing = () => {
+      waitFor("the sibling's job to start")(group != null && running(group).nonEmpty)
+      throw new IllegalStateException("family failed")
+    }
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](Pipeline.inParallel(spark, Seq(sibling, failing)))
+    assert(e.getMessage === "family failed")
+    assert(System.nanoTime() - t0 < 60L * 1000000000L, "the sibling ran on instead of being cancelled")
+    assert(siblingDone, "the sibling was still running when inParallel returned")
+    // the status tracker trails the scheduler: once a later marker job
+    // shows as finished, every earlier job-end event has been applied
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(marker, "drain")
+    try spark.range(1).collect() finally sc.clearJobGroup()
+    waitFor("the marker job's end")(tracker.getJobIdsForGroup(marker).nonEmpty &&
+      running(marker).isEmpty)
+    assert(running(group).isEmpty, s"group $group still has active jobs")
+  }
+
   test("clean handles nulls, strings, and timestamps generically") {
     val ev = Tables.events(spark, sf)
       .withColumn("value", when(col("event_id") % 7 === 0, lit(null)).otherwise(col("value")))

@@ -715,7 +715,7 @@ class SimilaritySpec extends SparkSuite {
       cents0((r.getAs[Int]("s"), r.getAs[Long]("cid"))) != r.getSeq[Double](2) }
     assert(moved > cents.length / 2, s"only $moved of ${cents.length} codewords moved")
     // recall A/B on a 60-query held-out split (the registered 5-query
-    // audit is 15-slot noise — DevPqLab's measured argument): learned
+    // audit is 15-slot noise — PLANS.md "learned PQ" measured it): learned
     // must beat the stand-in at the same C=24 beam
     val q = e.filter(col("vec_id") >= 16 && col("vec_id") % 8 === 0)
       .orderBy(col("vec_id")).limit(60)
