@@ -6,6 +6,8 @@
 # sync by eye. This hook runs the full Verify dump + DuckDB compare at
 # sf0.001 whenever staged changes touch main source, so a drifted pair
 # fails the COMMIT, not the driver round days later.
+# Staged changes under src/main/scala/graft/streaming/ also run
+# StreamingSpec and StreamingRecoverySpec.
 #
 # Skip (emergencies only): GRAFT_SKIP_GATE=1 git commit ...
 set -uo pipefail
@@ -48,6 +50,18 @@ if [ $rc -ne 0 ]; then
   echo "[gate] ORACLE MISMATCH — full log: $out/oracle.log"
   grep '^FAIL' "$out/oracle.log" | head -10
   exit 1
+fi
+
+# The oracle gate checks only the streaming sinks' batch twins; their
+# fold == rebuild, slicing and kill/resume properties live in these specs.
+if git diff --cached --name-only | grep -q '^src/main/scala/graft/streaming/'; then
+  echo "[gate] streaming sink specs (log: $out/streaming.log)"
+  if ! sbt -batch "testOnly graft.StreamingSpec graft.StreamingRecoverySpec" \
+      > "$out/streaming.log" 2>&1; then
+    echo "[gate] STREAMING SPECS FAILED — tail of $out/streaming.log:"
+    tail -20 "$out/streaming.log"
+    exit 1
+  fi
 fi
 echo "[gate] green"
 exit 0

@@ -123,7 +123,7 @@ class ArtifactsSpec extends SparkSuite {
       (11L, "another unrelated document entirely about parquet file layouts"))
       .toDF("doc_id", "text")
     // in-memory sink
-    val mem = new graft.streaming.Streams.DedupAdmissionSink(
+    val mem = new graft.streaming.DedupAdmissionSink(graft.streaming.SinkState.memory(),
       bootstrap = Some((s"$dir/bands", s"$dir/shingles")))
     mem.apply(batch, 0L)
     val memGot = mem.decisions.get.collect()
@@ -132,8 +132,9 @@ class ArtifactsSpec extends SparkSuite {
       s"bootstrapped in-memory sink must dedup against history: $memGot")
     // durable sink (fresh store → bootstrap applies; resumed store wins)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-art-boot-st").toString
-    val dur = new graft.streaming.DurableSinks.DurableDedupAdmissionSink(
-      spark, stateDir, bootstrap = Some((s"$dir/bands", s"$dir/shingles")))
+    val dur = new graft.streaming.DedupAdmissionSink(
+      graft.streaming.SinkState.durable(spark, stateDir),
+      bootstrap = Some((s"$dir/bands", s"$dir/shingles")))
     dur.apply(batch, 0L)
     val durGot = dur.decisions.get.collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap

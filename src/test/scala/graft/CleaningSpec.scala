@@ -57,6 +57,28 @@ class CleaningSpec extends SparkSuite {
     assert(math.abs(tot - 1.0) < 0.01)
   }
 
+  test("m7 importances are pinned across shuffle partitions 4 and 16, AQE on and off") {
+    // `graft.Probe show <sf0.001 dir> m7_feature_importance` prints
+    // these rows at SPARK_GRAFT_CPUS=2 and at 4; the suite's session
+    // runs local[8], so the spec pins m7's layout at c2, c4 and c8
+    val want = Seq("l_quantity" -> 0.447491, "l_discount" -> 0.325484, "l_tax" -> 0.227025)
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (parts <- Seq(4, 16); aqe <- Seq(true, false)) {
+        spark.conf.set(keys(0), parts.toLong)
+        spark.conf.set(keys(1), aqe)
+        val got = MLPrep.m7(spark, sf).collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq
+        withClue(s"shuffle partitions $parts, AQE $aqe: ") {
+          assert(got.map(_._1) === want.map(_._1))
+          got.zip(want).foreach { case ((f, g), (_, w)) =>
+            assert(math.abs(g - w) <= 1e-9, s"$f importance $g, pinned $w")
+          }
+        }
+      }
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("m11 SMOTE synthetics interpolate between neighbor prices") {
     val r = MLPrep.m11(spark, sf).collect()
     assert(r.nonEmpty)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.Streams
+import graft.streaming._
 
 class StreamingSpec extends SparkSuite {
 
@@ -285,7 +285,7 @@ class StreamingSpec extends SparkSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val mem = MemoryStream[(Long, Long, String, Double, Long)] // user, event, type, value, ms
-    val sink = new Streams.UpsertSink(Seq("user_id"), Seq(col("ms"), col("event_id")))
+    val sink = new UpsertSink(SinkState.memory(), Seq("user_id"), Seq(col("ms"), col("event_id")))
     val q = mem.toDF().toDF("user_id", "event_id", "event_type", "value", "ms")
       .writeStream.foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id))
       .start()
@@ -307,7 +307,7 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, String, java.lang.Double, Long)] // user, type, value, ms
-    val sink = new Streams.RollupSink(Seq("user_id", "event_type"), "value", "ms")
+    val sink = new RollupSink(SinkState.memory(), Seq("user_id", "event_type"), "value", "ms")
     val q = mem.toDF().toDF("user_id", "event_type", "value", "ms")
       .writeStream.foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id))
       .start()
@@ -400,7 +400,7 @@ class StreamingSpec extends SparkSuite {
     val n = recs.length
     // in-memory sink, two different slicings
     def memRun(cuts: Seq[Int]): Set[Seq[Any]] = {
-      val sink = new Streams.StreamCurateSink()
+      val sink = new CurateSink(SinkState.memory())
       run(cuts, () => sink.apply _, () => sink.decisions.get.collect().map(_.toSeq).toSet)
     }
     assert(memRun(Seq(n / 4, n / 2, 3 * n / 4, n)) === want,
@@ -432,7 +432,7 @@ class StreamingSpec extends SparkSuite {
       "no doc was ever rejected — the near-dup corpus makes this non-vacuous")
     def run(cuts: Seq[Int]): Set[Seq[Any]] = {
       val mem = MemoryStream[(Long, String)]
-      val sink = new Streams.DedupAdmissionSink()
+      val sink = new DedupAdmissionSink(SinkState.memory())
       val q = mem.toDF().toDF("doc_id", "text")
         .writeStream.outputMode("append")
         .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id))
@@ -842,7 +842,7 @@ class StreamingSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-merge-restart").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-merge-ckpt").toString
     log.filter(c("ts") < cut).write.mode("overwrite").parquet(s"$dir/files")
-    val sink = new Streams.UpsertSink(Seq("user_id"),
+    val sink = new UpsertSink(SinkState.memory(), Seq("user_id"),
       Seq(c("ts"), c("event_id")))
     def startQuery() = spark.readStream.schema(schema).parquet(s"$dir/files")
       .writeStream.option("checkpointLocation", ckpt)
@@ -902,7 +902,7 @@ class StreamingSpec extends SparkSuite {
       "some day must first appear after batch 0 or the fold is vacuous")
     def run(slices: Seq[Array[(String, Long, Long)]]): Set[(String, Long, Long)] = {
       val mem = MemoryStream[(String, Long)]
-      val sink = new Streams.DistinctCountSink
+      val sink = new DistinctCountSink(SinkState.memory())
       val q = mem.toDF().toDF("day", "user_id")
         .writeStream.outputMode("append")
         .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id))
@@ -992,7 +992,7 @@ class StreamingSpec extends SparkSuite {
     assert(want.nonEmpty)
     def run(slices: Seq[Array[(String, Option[Double], Long)]]): Set[Seq[Any]] = {
       val mem = MemoryStream[(String, Option[Double])]
-      val sink = new Streams.HistogramSink
+      val sink = new HistogramSink(SinkState.memory())
       val q = mem.toDF().toDF("event_type", "value")
         .writeStream.outputMode("append")
         .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id))
@@ -1042,7 +1042,7 @@ class StreamingSpec extends SparkSuite {
     assert(want.nonEmpty)
     def run(slices: Seq[Array[(String, Long, Long)]]): Set[Seq[Any]] = {
       val mem = MemoryStream[(String, Long)]
-      val sink = new Streams.KmvSink
+      val sink = new KmvSink(SinkState.memory())
       val q = mem.toDF().toDF("event_type", "user_id")
         .writeStream.outputMode("append")
         .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id))
