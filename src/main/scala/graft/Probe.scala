@@ -4,6 +4,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -15,7 +16,10 @@ import org.apache.spark.sql.functions.col
   *  - `time <keys> [reps=2]`: construct / plan / exec split per rep and
   *    the min wall (rep 1 absorbs codegen/JIT; read the min or the last
   *    rep). `toRdd.count` materializes the full output (Bench's
-  *    rationale: `Dataset.count()` elides join subtrees).
+  *    rationale: `Dataset.count()` elides join subtrees). Each rep also
+  *    reports `compiles`, the generated classes Janino compiled while
+  *    the key was built, planned and run: codegen-cache misses, so a
+  *    warm rep of a reusable key reads 0.
   *  - `jobs <keys> [reps=2]`: the same run, plus the last rep's Spark
   *    jobs (wall, task s, tasks, input MB, shuffle write/read MB), so a
   *    multi-job key (plan-time scalars, checkpoints, iterative
@@ -50,9 +54,10 @@ object Probe {
       inputBytes: Long, shuffleWriteBytes: Long, shuffleReadBytes: Long)
 
   /** One rep of a key: DataFrame construction (plan-time jobs and fits
-    * included), analysis + optimization + planning, then execution. */
+    * included), analysis + optimization + planning, then execution, and
+    * the classes compiled across all three. */
   final case class Run(key: String, rep: Int, constructS: Double, planS: Double,
-      execS: Double, rows: Long, jobs: Seq[Job]) {
+      execS: Double, rows: Long, compiles: Long, jobs: Seq[Job]) {
     def wallS: Double = constructS + planS + execS
   }
 
@@ -121,6 +126,11 @@ object Probe {
     } finally sc.removeSparkListener(l)
   }
 
+  /** Generated classes this JVM's Janino has compiled so far. Spark's
+    * codegen cache sits in front of the compiler, so a cache hit never
+    * reaches this count. */
+  private def compilations: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   private def timed[A](body: => A): (Double, A) = {
     val t0 = System.nanoTime()
     val a = body
@@ -130,13 +140,14 @@ object Probe {
   /** `time` and `jobs`: every key `reps` times, profiled. */
   def jobs(spark: SparkSession, dir: String, keys: Seq[String], reps: Int = 2): Seq[Run] =
     for (key <- keys; rep <- 1 to reps) yield {
-      val ((construct, plan, exec, n), js) = profiled(spark) {
+      val ((construct, plan, exec, n, compiles), js) = profiled(spark) {
+        val c0 = compilations
         val (c, df) = timed(SparkEntry.queries(key)(spark, dir))
         val (p, _) = timed(df.queryExecution.executedPlan) // analysis + optimization + planning
         val (e, n) = timed(df.queryExecution.toRdd.count())
-        (c, p, e, n)
+        (c, p, e, n, compilations - c0)
       }
-      Run(key, rep, construct, plan, exec, n, js)
+      Run(key, rep, construct, plan, exec, n, compiles, js)
     }
 
   def show(spark: SparkSession, dir: String, key: String, maxRows: Int = 50): Seq[Row] =
@@ -211,7 +222,7 @@ object Probe {
           runs.foreach { r =>
             println(f"[$verb] ${r.key} $dir rep${r.rep}: construct ${r.constructS}%.2f s, " +
               f"plan ${r.planS}%.2f s, exec ${r.execS}%.2f s = ${r.wallS}%.2f s, " +
-              s"${r.rows} rows, ${r.jobs.size} jobs")
+              s"${r.rows} rows, ${r.jobs.size} jobs, ${r.compiles} compiles")
           }
           keys.foreach { key =>
             val rs = runs.filter(_.key == key)

@@ -51,7 +51,19 @@ object Cleaning {
     * per-partition state is a fixed-size sketch instead of a distinct
     * value set. ~2% relative error (Spark's default rsd 0.05 bound;
     * spec-measured much tighter on real columns). `exact = true` is
-    * the oracle-parity path c1 uses. */
+    * the oracle-parity path c1 uses.
+    *
+    * The exact path is also why c1 compiles generated code again on
+    * every run (3-10 classes per run, the rest of the inventory ~0 once
+    * Spark's codegen cache holds it, `Sessions.tune`). Spark's
+    * RewriteDistinctAggregates numbers the distinct groups (the Expand's
+    * `gid`s and projection order) in the iteration order of a hash map
+    * keyed by each group's attributes, whose hashes include their
+    * exprIds; every construction reads the table under new exprIds, so
+    * the Expand and the aggregates above it come out in another order
+    * and their code misses the cache. Nothing in graft's plan decides
+    * the order, and the one-pass exact alternatives (collect_set sizes,
+    * one scan per column) cost far more than the compiles. */
   def profile(df: DataFrame, numCols: Seq[String], strCols: Seq[String],
       exact: Boolean = false): DataFrame = {
     def nd(c: String): Column =
@@ -326,6 +338,8 @@ object Cleaning {
   // Scale shape: ONE full-table agg computes every column's counters
   // (no per-column jobs — the Pipeline.clean lesson from round 3);
   // try_cast is codegen'd per row, the result is O(columns) rows.
+  // Its three countDistincts recompile 0-4 classes per run: the Expand
+  // order is Spark's, drawn from exprId hashes (see `profile`).
   def c10(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
       .select(col("lang"), col("source"), col("n_chars").cast("string").as("n_chars_str"))

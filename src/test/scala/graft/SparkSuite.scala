@@ -5,19 +5,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // local[8] (was 4): the suite's MLlib fits and streaming
-      // micro-batches submit concurrent jobs (autoPipeline trains
-      // model families in parallel since r19) — 4 threads serialized
-      // them. shuffle.partitions STAYS 4: the fixtures are tiny, so
-      // wider exchanges only add task overhead; partition-sensitive
-      // tests set their own value and restore it.
+    // The library's own tuning (`Sessions.tune`, codegen cache
+    // included), then the suite's overrides. local[8]: the suite's
+    // MLlib fits and streaming micro-batches submit concurrent jobs
+    // (autoPipeline trains model families in parallel). 4 shuffle
+    // partitions: the fixtures are tiny, so wider exchanges only add
+    // task overhead; partition-sensitive tests set their own value and
+    // restore it.
+    val s = Sessions.tune(SparkSession.builder(), 4)
       .master("local[8]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
