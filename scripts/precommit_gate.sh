@@ -7,7 +7,8 @@
 # sf0.001 whenever staged changes touch main source, so a drifted pair
 # fails the COMMIT, not the driver round days later.
 # Staged changes under src/main/scala/graft/streaming/ also run
-# StreamingSpec and StreamingRecoverySpec.
+# StreamingSpec and StreamingRecoverySpec; staged changes to
+# src/main/scala/graft/Config.scala (the lineage cut) run LineageCutSpec.
 #
 # Skip (emergencies only): GRAFT_SKIP_GATE=1 git commit ...
 set -uo pipefail
@@ -60,6 +61,16 @@ if git diff --cached --name-only | grep -q '^src/main/scala/graft/streaming/'; t
       > "$out/streaming.log" 2>&1; then
     echo "[gate] STREAMING SPECS FAILED — tail of $out/streaming.log:"
     tail -20 "$out/streaming.log"
+    exit 1
+  fi
+fi
+# The oracle gate runs every cut without a checkpoint dir; the cut's
+# contract on both backends lives in this spec.
+if git diff --cached --name-only | grep -q '^src/main/scala/graft/Config.scala$'; then
+  echo "[gate] lineage-cut spec (log: $out/lineage_cut.log)"
+  if ! sbt -batch "testOnly graft.LineageCutSpec" > "$out/lineage_cut.log" 2>&1; then
+    echo "[gate] LINEAGE-CUT SPEC FAILED — tail of $out/lineage_cut.log:"
+    tail -20 "$out/lineage_cut.log"
     exit 1
   fi
 fi

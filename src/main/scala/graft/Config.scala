@@ -2,136 +2,75 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Process-wide engine knobs.
+/** The lineage cut: every multi-consumer frontier in the batch
+  * operators (the frames d6/d19/d17/e2e_curate materialize once so each
+  * consumer branch doesn't re-execute the shared upstream pipeline)
+  * goes through [[Config.cut]] / [[Config.CutOps.cutLineage]].
   *
-  * The only knob today is the LINEAGE-CUT mode (round-15 VERDICT
-  * directive 4): every multi-consumer frontier in the batch operators
-  * (the frames d6/d19/d17/e2e_curate materialize once so each consumer
-  * branch doesn't re-execute the shared upstream pipeline) used to
-  * hard-code `localCheckpoint`, with the cluster alternative living in
-  * comments. The comment is now code: [[Config.cut]] /
-  * [[Config.CutOps.cutLineage]] is the one primitive those sites call,
-  * and the mode picks the materialization strategy.
-  *
-  * WHY THE CLUSTER MODE IS A RELIABLE CHECKPOINT, NOT
-  * persist(DISK_ONLY) — the comments' old suggestion, tried and
-  * MEASURED this round: `persist` caches data but does NOT truncate
-  * the logical plan, and the cut sites need the plan cut as much as
-  * the scan reuse — under persist the composed curate key's ANALYSIS
-  * went combinatorial (a thread dump showed `DeduplicateRelations`
-  * re-walking the uncut self-referencing lineage; the sf0.001 spec run
-  * burned 45+ CPU-minutes without finishing analysis, vs ~1 min
-  * end-to-end with a real cut). persist(DISK_ONLY) also stores blocks
-  * on EXECUTOR-local disk, so an executor loss still loses them (the
-  * kept lineage recomputes — through the very analysis blowup the cut
-  * exists to avoid). `Dataset.checkpoint` truncates the plan exactly
-  * like `localCheckpoint` but writes to the fault-tolerant checkpoint
-  * dir (HDFS/S3 on a cluster), which is the property the 100 TB
-  * comments were actually promising: an executor loss after
-  * materialization no longer kills the job.
+  * WHY A CHECKPOINT, NOT persist(DISK_ONLY) — tried and MEASURED:
+  * `persist` caches data but does NOT truncate the logical plan, and
+  * the cut sites need the plan cut as much as the scan reuse — under
+  * persist the composed curate key's ANALYSIS went combinatorial (a
+  * thread dump showed `DeduplicateRelations` re-walking the uncut
+  * self-referencing lineage; the sf0.001 spec run burned 45+
+  * CPU-minutes without finishing analysis, vs ~1 min end-to-end with a
+  * real cut). persist(DISK_ONLY) also stores blocks on EXECUTOR-local
+  * disk, so an executor loss still loses them.
   */
 object Config {
 
-  sealed trait LineageCut
-
-  /** Executor-local checkpoint — the single-JVM / local[n] default:
-    * cheapest cut (no write to a replicated store), but the truncated
-    * lineage is NOT recomputable and the blocks live on executor
-    * disk/memory, so on a real cluster an executor loss after
-    * materialization fails the job. */
-  case object LocalCheckpoint extends LineageCut
-
-  /** `Dataset.checkpoint` to the session's checkpoint dir — the
-    * multi-executor cluster mode: the same plan truncation as
-    * LocalCheckpoint (downstream analysis cost is identical), with the
-    * cut frame persisted to fault-tolerant storage so executor loss
-    * only re-reads, never recomputes or fails. Costs a write to the
-    * checkpoint store per cut — point the dir at the job's scratch
-    * bucket. If no checkpoint dir is set, [[cut]] falls back to a
-    * process-local temp dir ONLY on local[n] (cleaned at JVM exit);
-    * on a real cluster it fails fast — java.io.tmpdir is not shared
-    * storage and a silent fallback would defeat the mode. */
-  case object ReliableCheckpoint extends LineageCut
-
-  /** The mode every batch-operator cut site uses. Initialized from
-    * `SPARK_GRAFT_LINEAGE_CUT` (`localCheckpoint` default;
-    * `reliableCheckpoint`/`reliable` for the cluster mode) so the
-    * driver-contract mains can sweep both; assignable in-process for
-    * specs. */
-  @volatile var lineageCut: LineageCut =
-    sys.env.get("SPARK_GRAFT_LINEAGE_CUT").map(_.toLowerCase) match {
-      case Some("reliablecheckpoint") | Some("reliable") => ReliableCheckpoint
-      case _ => LocalCheckpoint
+  /** THE lineage-cut primitive: one materialization shared across
+    * consumers AND a truncated plan (both load-bearing — see the object
+    * Scaladoc). Same schema, same rows as `df`.
+    *
+    * Every cut is LAZY: building it marks the frame, and it
+    * materializes inside the first action that reads it. An eager cut
+    * buys nothing and costs a job: in a local[4] session with AQE on,
+    * an eager `localCheckpoint` of a groupBy ran 2 jobs when built and
+    * a lazy one 1, and the first `count()` after either ran 2; in
+    * trainCodebook's Lloyd loop the eager cuts made d17 run 38 one-task
+    * jobs. Lazy is not job-free, though: under AQE, building a cut
+    * plans its input adaptively, which runs the input's shuffle-map
+    * stages (only a cut of an exchange-free plan runs no job). Any
+    * job-free construction has to deal with that.
+    *
+    * The session's checkpoint dir picks the backend — no graft knob:
+    *  - no dir (the default): `localCheckpoint`. Cheapest; the blocks
+    *    live on executor disk/memory and the truncated lineage is not
+    *    recomputable, so on a cluster an executor loss after
+    *    materialization fails the job.
+    *  - a dir (`spark.checkpoint.dir`, or `sc.setCheckpointDir`): a
+    *    reliable `checkpoint` to it. Same plan truncation, written to
+    *    the store, so executor loss only re-reads. On a cluster point
+    *    it at shared storage (the job's HDFS/S3 scratch); a driver-local
+    *    path would not survive executor loss. [[FaultDrill]] shows both.
+    *
+    * The reliable path writes in a SEPARATE job after the first action,
+    * and an uncached subtree is RECOMPUTED by that job — the
+    * checkpoint-twice trap (measured: e2e_curate ×10 doubled, 30.4 →
+    * 61.9 s). A DISK_ONLY persist underneath turns the write job into a
+    * cache read: one compute, two writes. The cached copy is redundant
+    * once the checkpoint materializes, so a job-end listener drops it
+    * then (a long-lived session with many cut sites would otherwise
+    * keep every DISK_ONLY copy for its lifetime). */
+  def cut(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty) df.localCheckpoint(eager = false)
+    else {
+      val persisted = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val out = persisted.checkpoint(eager = false)
+      registerUnpersist(df.sparkSession, persisted, out)
+      out
     }
 
-  /** THE lineage-cut primitive: one materialization shared across
-    * consumers AND a truncated plan (both properties are load-bearing
-    * — see the object Scaladoc for the measured failure of cutting
-    * only one of them). `eager` materializes now vs on first action;
-    * semantics-neutral either way: same schema, same rows
-    * (LineageCutSpec gates it, and the full oracle sweep runs green
-    * under both modes). */
-  def cut(df: DataFrame, eager: Boolean = true): DataFrame = lineageCut match {
-    case LocalCheckpoint => df.localCheckpoint(eager)
-    case ReliableCheckpoint =>
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) {
-        // The temp-dir fallback is only correct where "executor disk"
-        // and "driver disk" are the same machine. On a real cluster
-        // executors would write checkpoint partitions to NON-SHARED
-        // local disk, silently defeating the executor-loss fault
-        // tolerance that is this mode's entire purpose — fail fast
-        // instead (round-16 ADVICE 3).
-        if (!sc.isLocal)
-          throw new IllegalStateException(
-            "Config.ReliableCheckpoint on a multi-executor cluster requires " +
-              "sparkContext.setCheckpointDir(<shared storage: HDFS/S3>); the " +
-              "java.io.tmpdir fallback is driver-local and would not survive " +
-              "executor loss. Set a checkpoint dir or use LocalCheckpoint.")
-        val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-        // One dir per session, deleted at JVM exit — checkpoint FILES
-        // are not GC'd by Spark unless
-        // spark.cleaner.referenceTracking.cleanCheckpoints=true (set
-        // in Sessions.tune for sessions the library builds; an
-        // existing session keeps whatever it was built with), so the
-        // hook is the backstop that keeps repeated local runs from
-        // accumulating dirs (round-16 VERDICT directive 2).
-        Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(dir.toFile)))
-        sc.setCheckpointDir(dir.toString)
-      }
-      // RDD checkpointing runs its write as a SEPARATE job after the
-      // first action, and an uncached subtree is RECOMPUTED by that
-      // job — the classic checkpoint-twice trap (measured: e2e_curate
-      // ×10 doubled, 30.4 → 61.9 s, before this persist). A DISK_ONLY
-      // persist underneath turns the write job into a cache read: one
-      // compute, two writes. The cached copy is redundant the moment
-      // the checkpoint materializes, so it is DROPPED then — eagerly
-      // below for eager cuts, via a job-end listener for lazy ones
-      // (round-16 VERDICT directive 2: 25 cut sites × long-lived
-      // sessions used to accumulate DISK_ONLY copies for the session
-      // lifetime).
-      val persisted = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val out = persisted.checkpoint(eager)
-      if (eager) persisted.unpersist(blocking = false)
-      else registerLazyUnpersist(df.sparkSession, persisted, out)
-      out
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  /** Lazy-cut frames whose DISK_ONLY copy is still pending drop:
+  /** Reliable cuts whose DISK_ONLY copy is still pending drop:
     * (owning SparkContext, persisted pre-cut frame, the cut frame's
     * physical RDD — whose ancestry contains the checkpoint-marked
-    * RDD). Entries are SCOPED to their context (round-17 ADVICE): an
-    * entry whose context has stopped is dropped at the next scan —
-    * unpersist on a dead context throws, and before the scoping the
-    * same entry re-threw inside onJobEnd on every job of the NEXT
-    * context (and retained the frame's plan graph forever). */
-  private val lazyPending =
+    * RDD). Entries are SCOPED to their context: an entry whose context
+    * has stopped is dropped at the next scan — unpersist on a dead
+    * context throws, and unscoped, the same entry re-threw inside
+    * onJobEnd on every job of the NEXT context (and retained the
+    * frame's plan graph forever). */
+  private val pending =
     new java.util.concurrent.ConcurrentLinkedQueue[
       (org.apache.spark.SparkContext, DataFrame, org.apache.spark.rdd.RDD[_])]()
   @volatile private var listenerOn: org.apache.spark.SparkContext = null
@@ -146,25 +85,24 @@ object Config {
     walk(rdd, 4)
   }
 
-  /** eager=false contract: the persist must outlive the FIRST action
-    * (that action's trailing checkpoint-write job is the cache read
-    * that fixes the checkpoint-twice trap), and is redundant after it.
-    * A job-end listener drains the pending queue — each entry drops as
-    * soon as any job observes its checkpoint materialized. A lazy cut
-    * that is never acted on keeps its (empty — nothing computed yet)
-    * persist entry; that is a plan-time registration, not stored
-    * blocks. */
-  private def registerLazyUnpersist(
+  /** The persist must outlive the FIRST action (that action's trailing
+    * checkpoint-write job is the cache read that fixes the
+    * checkpoint-twice trap), and is redundant after it. A job-end
+    * listener drains the pending queue — each entry drops as soon as
+    * any job observes its checkpoint materialized. A cut that is never
+    * acted on keeps its (empty — nothing computed yet) persist entry;
+    * that is a plan-time registration, not stored blocks. */
+  private def registerUnpersist(
       spark: SparkSession, persisted: DataFrame, out: DataFrame): Unit = {
     // resolve the RDD on the caller thread (plan-only, runs no job);
     // the listener thread then only walks dependencies
     val sc = spark.sparkContext
-    lazyPending.add((sc, persisted, out.queryExecution.toRdd))
+    pending.add((sc, persisted, out.queryExecution.toRdd))
     if (listenerOn ne sc) synchronized {
       if (listenerOn ne sc) {
         sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
           override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val it = lazyPending.iterator()
+            val it = pending.iterator()
             while (it.hasNext) {
               val (owner, p, r) = it.next()
               // a stopped owner's entry can never materialize its
@@ -186,9 +124,8 @@ object Config {
     }
   }
 
-  /** Postfix form: `frame.cutLineage()` — drop-in for the historical
-    * `.localCheckpoint()` call sites. */
+  /** Postfix form: `frame.cutLineage()`. */
   implicit class CutOps(private val df: DataFrame) extends AnyVal {
-    def cutLineage(eager: Boolean = true): DataFrame = cut(df, eager)
+    def cutLineage(): DataFrame = cut(df)
   }
 }

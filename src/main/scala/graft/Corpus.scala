@@ -234,7 +234,7 @@ object Corpus {
             .groupBy(col("__rid"))
             .agg((max(col("__cnt")).cast("double") / sum(col("__cnt"))).as("__ttf"))
             .filter(col("__ttf") > m).select(col("__rid").as("__rdrop"))
-            .cutLineage(eager = false)
+            .cutLineage()
           base.join(drops, id === col("__rdrop"), "left")
             .withColumn("f_repetition",
               col("f_model") && col("__dup_ok") && col("__rdrop").isNull)
@@ -253,12 +253,9 @@ object Corpus {
     // tokenize/quality/Gopher expressions per branch — the composed
     // ledger was paying the upstream pipeline 2× at ×10 (38.3 s vs a
     // 17.4 s single pass) and it dominated the ×100 exponent (0.72).
-    // eager = false: constructing the plan must not execute it; at
-    // 100 TB set Config.lineageCut = ReliableCheckpoint — same cut, written to the
-    // fault-tolerant checkpoint store (stage 5's note).
     val f3 = cfg.lang.map(l => predLang(col(textCol)) === l).getOrElse(lit(true))
     val flaggedL = flaggedR.withColumn("f_lang", col("f_repetition") && f3)
-      .cutLineage(eager = false)
+      .cutLineage()
 
     // stage 5: corpus-unigram-LM quality (t8's shape on survivors):
     // ONE rollup yields per-token counts and the grand total
@@ -269,22 +266,13 @@ object Corpus {
     // `toks` is materialized once: its two consumers (the tf rollup on
     // __tok, the scoring groupBy on __lid) shuffle on DIFFERENT keys,
     // so ReuseExchange can't serve both and the whole upstream flag
-    // pipeline would be re-run per consumer — d8's localCheckpoint
-    // pattern (at 100 TB, Config.lineageCut = ReliableCheckpoint — same cut,
-    // fault-tolerant store).
-    // eager = false: merely CONSTRUCTING the curate plan must not
-    // execute the upstream pipeline (the default eager=true does);
-    // materialization happens on first action. The trade stands
-    // either way: checkpointed blocks are not recomputable, so an
-    // executor loss after materialization fails the job rather than
-    // recomputing — acceptable for a batch curation run, and the
-    // DISK_ONLY persist alternative above restores recomputability.
+    // pipeline would be re-run per consumer — d8's cut pattern.
     val flaggedM = cfg.minAvgLogProb match {
       case None => flaggedL.withColumn("f_lm", col("f_lang"))
       case Some(minLp) =>
         val toks = flaggedL.filter(col("f_lang"))
           .select(id.as("__lid"), explode(tokens(col(textCol))).as("__tok"))
-          .cutLineage(eager = false)
+          .cutLineage()
         val tfAll = toks.rollup(col("__tok")).agg(count(lit(1)).as("__tf"))
         val tf = tfAll.filter(col("__tok").isNotNull)
         val total = tfAll.filter(col("__tok").isNull).select(col("__tf").as("__total"))
@@ -295,7 +283,7 @@ object Corpus {
           .agg((avg(log10(col("__tf").cast("double"))) -
             first(log10(col("__total").cast("double")))).as("__lp"))
           .filter(col("__lp") < minLp).select(col("__lid").as("__ldrop"))
-          .cutLineage(eager = false)
+          .cutLineage()
         flaggedL.join(drops, id === col("__ldrop"), "left")
           .withColumn("f_lm", col("f_lang") && col("__ldrop").isNull)
           .drop("__ldrop")
@@ -321,19 +309,13 @@ object Corpus {
       .withColumn("__keep", min(when(col("f_lm"), id)).over(wExact))
       .withColumn("f_exact", col("f_lm") && col("__keep") === id)
       .drop("__h", "__keep")
-      .cutLineage(eager = false)
+      .cutLineage()
 
     // stage 7: near-dup dedup among exact survivors — LSH candidates,
     // exact Jaccard verify, connected components, drop non-minima
     val surv4 = flagged1.filter(col("f_exact")).select(id, col(textCol))
-    val pairs = Dedup.minhashCandidatePairs(surv4, textCol, idCol)
-    val sh = surv4.select(id.as("__sid"), shingles3(tokens(col(textCol))).as("__sh"))
-    val verified = pairs
-      .join(sh.select(col("__sid").as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
-      .join(sh.select(col("__sid").as("id_b"), col("__sh").as("__shb")), Seq("id_b"))
-      .filter(jaccardAuto(docs.sparkSession, col("__sha"), col("__shb")) >= cfg.nearDupTau)
-      .select(col("id_a"), col("id_b"))
-    val dropNear = Dedup.connectedComponents(verified)
+    val dropNear = Dedup.connectedComponents(
+        Dedup.verifiedNearDupPairs(surv4, textCol, idCol, cfg.nearDupTau))
       .filter(col("id") =!= col("cluster")).select(col("id").as("__drop"))
     val flagged2 = flagged1.join(dropNear, id === col("__drop"), "left")
       .withColumn("f_neardup", col("f_exact") && col("__drop").isNull)
@@ -352,7 +334,7 @@ object Corpus {
         // without this the quality/LM/dedup stages re-execute per
         // k-means iteration (connectedComponents' own lesson)
         val embSurv = emb.join(surv, emb(idCol) === col("__eid")).drop("__eid")
-          .cutLineage(eager = false)
+          .cutLineage()
         // collapseExact = false — a perf choice, stated precisely:
         // stage 5's exact dedup removes byte-identical TEXTS, and this
         // corpus's embeddings are text-derived, so byte-identical
@@ -367,7 +349,7 @@ object Corpus {
             cfg.semanticK, cfg.semanticTau, seedHash = cfg.semanticSeedHash,
             annProbes = cfg.semanticAnnProbes, collapseExact = false)
           .filter(!col("kept")).select(col("id").as("__sdrop"))
-          .cutLineage(eager = false) // tiny drop set, linear analysis
+          .cutLineage() // tiny drop set, linear analysis
         flagged2.join(drops, id === col("__sdrop"), "left")
           .withColumn("f_semdup", col("f_neardup") && col("__sdrop").isNull)
           .drop("__sdrop")
@@ -383,7 +365,7 @@ object Corpus {
             ev, flaggedSem.filter(col("f_semdup")).select(id, col(textCol)),
             textCol, idCol, cfg.ngramK)
           .filter(col("contaminated")).select(col("id").as("__cid"))
-          .cutLineage(eager = false) // tiny drop set, linear analysis
+          .cutLineage() // tiny drop set, linear analysis
         flaggedSem.join(contaminated, id === col("__cid"), "left")
           .withColumn("f_clean", col("f_semdup") && col("__cid").isNull)
           .drop("__cid")
@@ -398,7 +380,7 @@ object Corpus {
           .groupBy(col(sourceCol)).agg(count(lit(1)).as("__n_c"))
         val thr = counts.select(col(sourceCol),
           expr(s"(${graft.functions.Sampling.Buckets}L * least(${target}L, __n_c)) div __n_c").as("__thr"))
-          .cutLineage(eager = false) // O(#sources) rows, linear analysis
+          .cutLineage() // O(#sources) rows, linear analysis
         // Sampling.bucket is the ONE sampler hash (m15/m16's);
         // sampleIdHash (default xxhash64) pre-keys so non-integer id
         // columns still key deterministically.
@@ -424,24 +406,16 @@ object Corpus {
             round(qualityScore(col(textCol)), 6).as("__q"))
           .withColumn("__cum", coalesce(sum(col("__btok")).over(w), lit(0L)))
           .filter(col("__cum") >= b).select(col("__bid").as("__bdrop"))
-          .cutLineage(eager = false) // tiny drop set, linear analysis
+          .cutLineage() // tiny drop set, linear analysis
         flagged4.join(drops, id === col("__bdrop"), "left")
           .withColumn("f_budget", col("f_sampled") && col("__bdrop").isNull)
           .drop("__bdrop")
       case None => flagged4.withColumn("f_budget", col("f_sampled"))
     }
 
-    val stageCols = Seq("input" -> lit(true),
-      "min_tokens" -> col("f_tokens"), "quality" -> col("f_quality"),
-      "gopher_rules" -> col("f_gopher"), "model_quality" -> col("f_model"),
-      "repetition" -> col("f_repetition"), "language" -> col("f_lang"),
-      "lm_quality" -> col("f_lm"), "exact_dedup" -> col("f_exact"),
-      "near_dedup" -> col("f_neardup"), "semantic_dedup" -> col("f_semdup"),
-      "decontaminated" -> col("f_clean"),
-      "sampled" -> col("f_sampled"), "token_budget" -> col("f_budget"))
-    val aggs = stageCols.map { case (n, c) => sum(when(c, 1L).otherwise(0L)).as(n) }
+    val aggs = StageFlags.map { case (n, c) => sum(when(c, 1L).otherwise(0L)).as(n) }
     val one = flagged5.agg(aggs.head, aggs.tail: _*)
-    val report = one.select(explode(array(stageCols.zipWithIndex.map { case ((n, _), i) =>
+    val report = one.select(explode(array(StageFlags.zipWithIndex.map { case ((n, _), i) =>
         struct(lit(i).as("stage_idx"), lit(n).as("stage"), col(n).as("surviving")) }: _*)).as("p"))
       .select("p.*")
     val kept = flagged5.filter(col("f_budget")).select(docs.columns.toSeq.map(col): _*)

@@ -169,7 +169,8 @@ object Probe {
     if (variant == "curate") "e2e_curate" else s"e2e_curate_$variant"
 
   /** The curate run's construction wall (`Corpus.curate` runs its
-    * plan-time jobs and checkpoints eagerly), then one cut per stage. */
+    * plan-time jobs, and AQE runs each cut input's shuffle-map
+    * stages), then one cut per stage. */
   def stages(spark: SparkSession, dir: String, variant: String = "curate"): (Double, Seq[Cut]) = {
     val (construct, run) = timed(CurateRuns(variant)(spark, dir))
     val timings = Corpus.StageFlags.map { case (name, flag) =>

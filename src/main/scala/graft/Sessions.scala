@@ -58,12 +58,12 @@ object Sessions {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // ReliableCheckpoint cuts write RDD checkpoint files that Spark
-      // does NOT clean when the RDD is GC'd unless this is on — a
-      // long-lived session (one JVM, many cut invocations) would
-      // otherwise accumulate checkpoint dirs for its whole lifetime
-      // (round-16 VERDICT directive 2). Read by ContextCleaner at
-      // context construction, so it must be set here, not after.
+      // With a checkpoint dir set, every Config.cut writes RDD
+      // checkpoint files under it, and Spark does NOT delete them when
+      // the RDD is GC'd unless this is on — a long-lived session (one
+      // JVM, many cuts) would otherwise fill the dir for its whole
+      // lifetime. Read by ContextCleaner at context construction, so it
+      // must be set here, not after.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.codegen.useIdInClassName", "false")

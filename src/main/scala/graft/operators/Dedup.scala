@@ -92,13 +92,13 @@ object Dedup {
     * (property-tested against each other). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
       localEdgeThreshold: Long = 10000000L): DataFrame = {
-    // Materialize the edges BEFORE the dispatch count: callers hand in
-    // a lazy plan whose upstream is the whole candidate+verify
-    // pipeline (LSH self-join + Jaccard filter — the suite's most
-    // expensive stage), and without this the count() evaluates it once
-    // and the chosen path evaluates it AGAIN from scratch. Both paths
-    // need stable edges anyway (the iterative one re-reads them every
-    // round).
+    // Cut the edges BEFORE the dispatch count: callers hand in a plan
+    // whose upstream is the whole candidate+verify pipeline (LSH
+    // self-join + Jaccard filter — the suite's most expensive stage),
+    // and uncut, the count() evaluates it once and the chosen path
+    // evaluates it AGAIN from scratch. The count materializes the cut.
+    // Both paths need stable edges anyway (the iterative one re-reads
+    // them every round).
     val edges = pairs.cutLineage()
     if (edges.count() <= localEdgeThreshold) connectedComponentsLocal(edges)
     else connectedComponentsIterative(edges, maxIter)
@@ -138,7 +138,7 @@ object Dedup {
   /** Distributed iterative path of [[connectedComponents]] — see its
     * Scaladoc for the propagation + pointer-jumping scheme. */
   def connectedComponentsIterative(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // localCheckpoint truncates lineage each round — without it the
+    // the cut truncates lineage each round — without it the
     // union→join→agg plan nests per iteration and analysis cost (and
     // driver heap) grows exponentially, the classic iterative-Spark
     // failure mode.
@@ -179,20 +179,27 @@ object Dedup {
     labels
   }
 
+  /** Library API: verified near-dup pairs — [[minhashCandidatePairs]],
+    * then each pair's exact word-3-shingle Jaccard ≥ `tau`. Returns
+    * (id_a, id_b) with id_a < id_b: the edge set
+    * [[connectedComponents]] clusters. */
+  def verifiedNearDupPairs(docs: DataFrame, textCol: String, idCol: String,
+      tau: Double): DataFrame = {
+    val sh = docs.select(col(idCol).as("__sid"), shingles3(tokens(col(textCol))).as("__sh"))
+    minhashCandidatePairs(docs, textCol, idCol)
+      .join(sh.select(col("__sid").as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
+      .join(sh.select(col("__sid").as("id_b"), col("__sh").as("__shb")), Seq("id_b"))
+      .filter(jaccardAuto(docs.sparkSession, col("__sha"), col("__shb")) >= tau)
+      .select(col("id_a"), col("id_b"))
+  }
+
   /** Library API: full near-dup dedup — LSH candidates → Jaccard
     * verify (τ) → connected components → keep the smallest id per
     * cluster. The complete candidates/verify/cluster/keep pipeline a
     * 100 TB corpus dedup runs. */
   def dedupNearDuplicates(docs: DataFrame, textCol: String, idCol: String,
       tau: Double = 0.9): DataFrame = {
-    val candidates = minhashCandidatePairs(docs, textCol, idCol)
-    val sh = docs.select(col(idCol).as("id"), shingles3(tokens(col(textCol))).as("sh"))
-    val verified = candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .filter(jaccardAuto(docs.sparkSession, col("sh_a"), col("sh_b")) >= tau)
-      .select(col("id_a"), col("id_b"))
-    val clusters = connectedComponents(verified)
+    val clusters = connectedComponents(verifiedNearDupPairs(docs, textCol, idCol, tau))
     val drop = clusters.filter(col("id") =!= col("cluster")).select(col("id"))
     docs.join(drop, docs(idCol) === drop("id"), "left_anti")
   }
@@ -209,14 +216,8 @@ object Dedup {
     * construction), never a corpus-wide window. */
   def dedupKeepBest(docs: DataFrame, textCol: String, idCol: String,
       scoreCol: String, tau: Double = 0.9): DataFrame = {
-    val candidates = minhashCandidatePairs(docs, textCol, idCol)
-    val sh = docs.select(col(idCol).as("id"), shingles3(tokens(col(textCol))).as("sh"))
-    val verified = candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .filter(jaccardAuto(docs.sparkSession, col("sh_a"), col("sh_b")) >= tau)
-      .select(col("id_a"), col("id_b"))
-    val clusters = connectedComponents(verified) // (id, cluster); singletons absent
+    // (id, cluster); singletons absent
+    val clusters = connectedComponents(verifiedNearDupPairs(docs, textCol, idCol, tau))
     val scored = docs.select(col(idCol).as("id"), col(scoreCol).as("__score"))
       .join(clusters, Seq("id"))
     val keep = scored.groupBy(col("cluster"))
@@ -469,10 +470,9 @@ object Dedup {
       explode(shinglesK(tokens(col(textCol)), k)).as("ng"))
     // The train n-gram set feeds BOTH the bloom aggregate and the
     // exact join — checkpoint it so the tokenize+shingle+distinct scan
-    // runs once, not per branch (Config.lineageCut = ReliableCheckpoint at
-    // 100 TB — the cut survives executor loss there).
+    // runs once, not per branch.
     val trainG0 = train.select(explode(shinglesK(tokens(col(textCol)), k)).as("ng")).distinct()
-    val trainG = if (useBloom) trainG0.cutLineage(eager = false) else trainG0
+    val trainG = if (useBloom) trainG0.cutLineage() else trainG0
     val evalG = if (useBloom) bloomPrefilter(evalG0, "ng", trainG, "ng") else evalG0
     val hits = evalG.join(trainG, Seq("ng"))
       .groupBy(col("id")).agg(count(lit(1)).as("n_shared")) // evalG n-grams are per-doc distinct
@@ -595,8 +595,7 @@ object Dedup {
     // ReuseExchange can NOT serve both and the corpus would be
     // re-scanned and re-exploded per consumer. The repartition sets
     // explode parallelism from the split count (one file at small SF)
-    // to the core count; at 100 TB swap localCheckpoint for
-    // Config.lineageCut = ReliableCheckpoint — same cut, fault-tolerant store.
+    // to the core count.
     val spans = Tables.documents(s, dir)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), explode(shinglesAllK(tokens(col("text")), 8)).as("span"))
@@ -886,19 +885,19 @@ object Dedup {
     // distinct, so the collapse is the identity there.
     // base feeds every Lloyd iteration plus the final assignment —
     // checkpoint it so the scan+vector-parse runs once, not per
-    // consumer branch (`Probe scans`; Config.lineageCut = ReliableCheckpoint at 100 TB).
+    // consumer branch (`Probe scans`).
     val (base, twinRows) = annProbes match {
       case Some(_) if collapseExact =>
         val g = baseAll.groupBy(col("embedding"))
           .agg(min(col("id")).as("__rep"), collect_list(col("id")).as("__ids"))
-          .cutLineage(eager = false)
+          .cutLineage()
         val reps = g.select(col("__rep").as("id"), col("embedding"))
         val twins = g.filter(size(col("__ids")) > 1)
           .withColumn("__selfcos", cosineAuto(s, col("embedding"), col("embedding")))
           .select(col("__rep"), col("__selfcos"), explode(col("__ids")).as("id"))
           .filter(col("id") =!= col("__rep"))
         (reps, Some(twins))
-      case _ => (baseAll.cutLineage(eager = false), None)
+      case _ => (baseAll.cutLineage(), None)
     }
     val zeros = base0.filter(normSq(col("embedding")) <= 0)
       .select(col("id"), lit(-1L).as("cell"), lit(true).as("kept"),
@@ -924,7 +923,7 @@ object Dedup {
         .groupBy(col("id"))
         .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cell"),
           first(col("embedding")).as("embedding"))
-    }).cutLineage(eager = false)
+    }).cutLineage()
     // cell −2 (ANN assignment miss) must not form its own pair pool —
     // unassigned rows are kept unconditionally (no-op on exact path)
     val capped = capBuckets(assigned.filter(col("cell") >= 0), maxCell, col("cell"))
@@ -1400,13 +1399,13 @@ object Dedup {
     val nAll = all.count() // one scalar at plan time (d17/s12's documented class)
     // base feeds the codebook sample, the exact N·k side, the ANN
     // side, and both prunings — one checkpoint pays the scan once
-    // (`Probe scans`; Config.lineageCut = ReliableCheckpoint at 100 TB).
+    // (`Probe scans`).
     val base = (if (nAll <= cap) all else
       all.orderBy(
         pmod(pmod(pmod(col("id"), lit(P)) * 1103515245L
           + 181L * 2654435761L + 12345L, lit(P)) * 48271L, lit(P)),
         col("id"))
-        .limit(cap.toInt)).cutLineage(eager = false)
+        .limit(cap.toInt)).cutLineage()
     val n = math.min(nAll, cap)
     val k = sizedCells(n, 25)
     val planes = Similarity.sizedPlanes(k.toLong, 8)
@@ -1624,7 +1623,7 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(shinglesAllK(col("tk"), k)).as(Seq("sp0", "span")))
       .select(col("doc_id"), col("sp0"), xxhash64(col("span")).as("sh"))
-      .cutLineage() // at 100 TB set Config.lineageCut = ReliableCheckpoint (d8)
+      .cutLineage() // d8's cut
     val dfreq = spans.groupBy(col("sh")).agg(countDistinct(col("doc_id")).as("nd"))
     val per = spans.join(dfreq, Seq("sh"))
       .groupBy(col("doc_id"))
@@ -2020,18 +2019,17 @@ object Dedup {
     // checkpointed distinct set. The cut itself is the round-15
     // lineage lesson: ev feeds two join branches and tr three (count
     // scalar, position set, truth semi-join) — uncut, each branch
-    // re-executes the scan. At 100 TB set Config.lineageCut =
-    // ReliableCheckpoint.
+    // re-executes the scan.
     val gd = g.distinct()
       .withColumn("__ev", col("source").isin(evalSources: _*))
-      .cutLineage(eager = false)
+      .cutLineage()
     val ev = gd.filter(col("__ev")).select(col("source"), col("ng"))
     // tr feeds THREE consumers (the count scalar below, the position
     // set, the truth semi-join) — uncut, its distinct shuffle re-runs
     // per consumer (round-18 ADVICE). The count() is the first action,
-    // so the lazy cut materializes there and the joins read it back.
+    // so the cut materializes there and the joins read it back.
     val tr = gd.filter(!col("__ev")).select(col("ng")).distinct()
-      .cutLineage(eager = false)
+      .cutLineage()
     val mExp = bloomBitsExp(tr.count()) // one plan-time scalar (sizedPlanes class)
     val mBits = 1L << mExp
     def posJ(code: Column, j: Int): Column =

@@ -397,7 +397,7 @@ object Multimodal {
   //    at the cost of a noisier (still unbiased) bit majority;
   //  - the signature frame fed both the bucket explode and the final
   //    left-join, and Spark computes an unshared subtree TWICE —
-  //    localCheckpoint materializes the (doc_id, ncodes, phash) frame
+  //    a lineage cut materializes the (doc_id, ncodes, phash) frame
   //    once (24 B/doc; d12's exchange lesson).
   // Payloads with NO sampled gram (tiny, or < 4 bytes) hash to 0 and
   // are excluded from bucketing — they must not pair with each other.

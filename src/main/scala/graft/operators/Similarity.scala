@@ -188,20 +188,13 @@ object Similarity {
       // byte decision ([[annBroadcastOk]]); -1 assumes [[AnnAssumedDim]].
       dim: Int = -1): DataFrame = {
     val s = corpus.sparkSession
-    // eager = false on every cut in this loop (r19): each Lloyd
-    // iteration is inherently sequential, so an EAGER checkpoint adds
-    // a dedicated materialization job per iteration — at bench scale
-    // d17 ran 38 one-task jobs whose fixed overhead dominated the key.
-    // A lazy cut truncates the plan identically but materializes
-    // INSIDE the next iteration's first job (one job boundary per
-    // iteration instead of two). Semantics unchanged (LineageCutSpec).
     var cents = corpus.select(col("id"), col("embedding"))
       .withColumn("__h", seedHash(col("id")))
       .orderBy(col("__h"), col("id")).limit(k)
       .withColumn("cid",
         row_number().over(Window.orderBy(col("__h"), col("id"))).cast("long") - 1)
       .select(col("cid"), col("embedding").as("cemb"))
-      .cutLineage(eager = false)
+      .cutLineage()
     val annPlanes = sizedPlanes(k.toLong, 8)
     for (_ <- 1 to iters) {
       val assigned = annProbes match {
@@ -228,7 +221,7 @@ object Similarity {
         .groupBy(col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           e => e.getField("m").cast("float")).as("cemb"))
-        .cutLineage(eager = false)
+        .cutLineage()
     }
     cents.select(col("cid").as("id"), col("cemb").as("embedding"))
   }
@@ -1872,7 +1865,7 @@ object Similarity {
     val wP = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand_id"))
     val withE = pairs.withColumn("rk", row_number().over(wP)).filter(col("rk") <= pool)
       .select(col("q_id"), col("cand_id"), col("cos"), col("ce").as("__e"))
-      .cutLineage(eager = false)
+      .cutLineage()
     val cands = withE.select(col("q_id"), col("cand_id"), col("cos"))
     val cc = withE.select(col("q_id"), col("cand_id").as("a_id"), col("__e").as("__ea"))
       .join(withE.select(col("q_id"), col("cand_id").as("b_id"), col("__e").as("__eb")),
@@ -1880,7 +1873,7 @@ object Similarity {
       .filter(col("a_id") =!= col("b_id"))
       .withColumn("ccos", cosineAuto(s, col("__ea"), col("__eb")))
       .select(col("q_id"), col("a_id"), col("b_id"), col("ccos"))
-      .cutLineage(eager = false)
+      .cutLineage()
     // step 1: pure relevance (div = 0 — nothing selected yet)
     var selected = cands.groupBy(col("q_id"))
       .agg(max_by(
@@ -1904,7 +1897,7 @@ object Similarity {
           struct(col("__sraw"), -col("cand_id"))).as("__p"))
         .select(col("q_id"), lit(j.toLong).as("rk"),
           col("__p.cand_id").as("cand_id"), col("__p.score").as("score"))
-      selected = selected.unionByName(pick).cutLineage(eager = false)
+      selected = selected.unionByName(pick).cutLineage()
     }
     selected
   }

@@ -548,8 +548,8 @@ object Upsert {
     // In production the snapshots and the CDC batch are PERSISTED
     // tables (that is the point of incremental maintenance); deriving
     // them inline here would re-scan the event log once per downstream
-    // reference (~30 scans in the un-checkpointed plan). localCheckpoint
-    // stands in for that persistence: each frame materializes once.
+    // reference (~30 scans in the uncut plan). The cut stands in for
+    // that persistence: each frame materializes once.
     val oldSnap = latestSnapshot(purch.filter(col("ms") < CutoffMs),
       Seq("user_id"), Seq(col("ms"), col("event_id"))).cutLineage()
     val newSnap = latestSnapshot(purch, Seq("user_id"), Seq(col("ms"), col("event_id")))

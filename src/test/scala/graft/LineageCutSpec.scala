@@ -1,124 +1,166 @@
 package graft
 
+import java.io.File
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.CheckpointShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The lineage-cut knob (round-15 VERDICT directive 4): the cluster
-  * fault-tolerance design claim is a Config mode, not a comment — both
-  * modes must be semantics-neutral at every cut site, and both must
-  * actually CUT (Config's Scaladoc records the measured persist
-  * failure: cached-but-uncut lineage sent the composed curate key's
-  * analysis combinatorial). The full oracle sweep runs green under
-  * both modes per round (PLANS.md); this spec pins the primitive's
-  * contract and the heaviest cut-using operators cross-mode
-  * in-process.
+/** [[Config.cut]]'s contract: every cut is lazy, and the session's
+  * checkpoint dir alone picks the backend (a reliable checkpoint with a
+  * dir, a localCheckpoint without). Both backends must be
+  * semantics-neutral at every cut site and must actually CUT (Config's
+  * Scaladoc records the measured persist failure: cached-but-uncut
+  * lineage sent the composed curate key's analysis combinatorial).
+  *
+  * Every test leaves the session with no checkpoint dir: the suites
+  * sharing this test JVM run without one.
   */
 class LineageCutSpec extends SparkSuite {
 
-  private def withMode[A](m: Config.LineageCut)(body: => A): A = {
-    val prev = Config.lineageCut
-    Config.lineageCut = m
-    try body finally Config.lineageCut = prev
+  private def sc = spark.sparkContext
+
+  private def deleteRecursively(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete(): Unit
   }
 
-  test("cut() is semantics-neutral and PLAN-EQUAL across modes: both truncate to the same leaf shape") {
+  private def files(dir: File): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+
+  private def withoutCheckpointDir[A](body: => A): A = {
+    assert(sc.getCheckpointDir.isEmpty, "the session already has a checkpoint dir")
+    body
+  }
+
+  /** `body` runs with a fresh checkpoint dir set; the dir is cleared
+    * and deleted afterwards, whatever `body` does. */
+  private def withCheckpointDir[A](body: File => A): A = withoutCheckpointDir {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cut-spec").toFile
+    sc.setCheckpointDir(dir.toString)
+    try body(dir)
+    finally {
+      CheckpointShim.clearCheckpointDir(sc)
+      deleteRecursively(dir)
+    }
+  }
+
+  private def withBackend[A](reliable: Boolean)(body: => A): A =
+    if (reliable) withCheckpointDir(_ => body) else withoutCheckpointDir(body)
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val started = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet(): Unit
+    }
+    CheckpointShim.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      CheckpointShim.drainListenerBus(sc)
+      (a, started.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Whether the cut frame reads a localCheckpoint: the marked RDD sits
+    * 1-2 hops below the frame's physical RDD. */
+  private def locallyCheckpointed(cut: DataFrame): Boolean = {
+    def walk(r: org.apache.spark.rdd.RDD[_], depth: Int): Boolean =
+      CheckpointShim.isLocallyCheckpointed(r) ||
+        (depth > 0 && r.dependencies.exists(d => walk(d.rdd, depth - 1)))
+    walk(cut.queryExecution.toRdd, 4)
+  }
+
+  test("the checkpoint dir picks the backend: a cut writes checkpoint files under a set dir, and none without one") {
+    val df = spark.range(0, 100, 1, 4).toDF("id")
+    withCheckpointDir { dir =>
+      val c = Config.cut(df)
+      assert(c.count() === 100L)
+      val written = files(dir).filter(_.getParentFile.getName.startsWith("rdd-"))
+      assert(written.nonEmpty, s"no RDD checkpoint files under the checkpoint dir $dir")
+      assert(!locallyCheckpointed(c))
+    }
+    withoutCheckpointDir {
+      val c = Config.cut(df)
+      assert(c.count() === 100L)
+      assert(sc.getCheckpointDir.isEmpty, "a cut without a checkpoint dir set one")
+      assert(locallyCheckpointed(c), "a cut without a checkpoint dir is not a localCheckpoint")
+    }
+  }
+
+  test("cut() is semantics-neutral and PLAN-EQUAL across backends: both truncate to the same leaf shape") {
     val df = Tables.documents(spark, sf)
       .select(col("doc_id"), length(col("text")).as("len"))
     val want = df.orderBy(col("doc_id")).collect().toSeq
-    def leaf(m: Config.LineageCut) = withMode(m) {
+    def leaf(): String = {
       val c = Config.cut(df)
       assert(c.schema === df.schema)
       assert(c.orderBy(col("doc_id")).collect().toSeq === want)
       c.queryExecution.analyzed.getClass.getSimpleName
     }
-    val l = leaf(Config.LocalCheckpoint)
-    val r = leaf(Config.ReliableCheckpoint)
-    // plan equality of the cut frames: the lineage is GONE in both
-    // modes — each analyzes to the same single leaf node class
-    // (LogicalRDD over the materialized blocks), so downstream
-    // analysis/optimization cost is identical whichever mode runs
+    val l = withoutCheckpointDir(leaf())
+    val r = withCheckpointDir(_ => leaf())
+    // the lineage is GONE on both backends — each analyzes to the same
+    // single leaf node class (LogicalRDD over the materialized blocks),
+    // so downstream analysis/optimization cost is identical
     assert(l === r)
     assert(l === "LogicalRDD", s"cut frame should be a materialized leaf, got $l")
   }
 
-  test("cut-heavy operators are mode-invariant: d6 / d7 / e2e_curate_fixed byte-identical across modes") {
+  test("cut-heavy operators are backend-invariant: d6 / d7 / e2e_curate_fixed byte-identical with and without a checkpoint dir") {
     def run(key: String) =
       SparkEntry.queries(key)(spark, sf).collect().map(_.toSeq).toSeq
     for (key <- Seq("d6_decontaminate", "d7_neardup_clusters", "e2e_curate_fixed")) {
-      val local = withMode(Config.LocalCheckpoint) { run(key) }
-      val reliable = withMode(Config.ReliableCheckpoint) { run(key) }
-      assert(reliable === local, s"$key diverged between lineage-cut modes")
+      val local = withoutCheckpointDir(run(key))
+      val reliable = withCheckpointDir(_ => run(key))
+      assert(reliable === local, s"$key diverged between the cut backends")
     }
   }
 
-  test("reliable eager cut: subtree computed ONCE (checkpoint-twice stays fixed) and zero persistent RDDs left behind") {
-    withMode(Config.ReliableCheckpoint) {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      // Count actual computes of the pre-cut subtree with an
-      // accumulator-bearing UDF (test-only; main source bans UDFs).
-      // Local mode, no speculation/retries: the count is exact.
-      val acc = sc.longAccumulator("subtree-computes")
-      val tick = udf((x: Long) => { acc.add(1L); x })
-      val df = spark.range(0, 1000, 1, 4).toDF("id")
-        .select(tick(col("id")).as("id"))
-      val cut = Config.cut(df) // eager
-      // One compute: the materialization job fills the DISK_ONLY
-      // cache and the trailing checkpoint-write job READS that cache
-      // (the r16 trap was 2× here: 1000 → 2000)
-      assert(acc.value === 1000L,
-        s"checkpoint-twice trap regressed: subtree computed ${acc.value / 1000.0}x")
-      // consumers read checkpoint blocks, never the subtree
-      cut.agg(sum(col("id"))).collect()
-      cut.count()
-      assert(acc.value === 1000L, "a consumer recomputed the cut subtree")
-      // directive-2 gate: the redundant DISK_ONLY copy is dropped the
-      // moment the eager checkpoint returns — nothing accumulates
-      // across the session's 25 cut sites
-      val leaked = sc.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty, s"DISK_ONLY cut copy leaked persistent RDDs: $leaked")
-    }
-  }
-
-  test("reliable lazy cut: plan construction runs nothing; persist drops once the first action materializes the checkpoint") {
-    withMode(Config.ReliableCheckpoint) {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val acc = sc.longAccumulator("lazy-subtree-computes")
-      val tick = udf((x: Long) => { acc.add(1L); x })
-      val df = spark.range(0, 800, 1, 4).toDF("id")
-        .select(tick(col("id")).as("id"))
-      val cut = Config.cut(df, eager = false)
-      assert(acc.value === 0L, "lazy cut executed the subtree at plan time")
-      assert(cut.count() === 800L) // first action: compute + checkpoint write
-      assert(acc.value === 800L, "first action on a lazy cut computed the subtree more than once")
-      // the job-end listener drains asynchronously (the write job's
-      // own end event is the earliest trigger) — poll, nudging the
-      // bus with no-op jobs
-      val deadline = System.currentTimeMillis() + 15000
-      while (System.currentTimeMillis() < deadline &&
-        (sc.getPersistentRDDs.keySet -- before).nonEmpty) {
-        spark.range(1).count(): Unit
-        Thread.sleep(100)
+  for (reliable <- Seq(false, true)) {
+    val name = if (reliable) "reliable" else "local"
+    test(s"$name cut: building runs no job, the first action computes the subtree once, the next none, and no persist copy is left") {
+      withBackend(reliable) {
+        val before = sc.getPersistentRDDs.keySet
+        // Count actual computes of the pre-cut subtree with an
+        // accumulator-bearing UDF (test-only; main source bans UDFs).
+        // Local mode, no speculation/retries: the count is exact.
+        val acc = sc.longAccumulator(s"$name-subtree-computes")
+        val tick = udf((x: Long) => { acc.add(1L); x })
+        // no exchange: under AQE, building a cut of an exchange runs
+        // the exchange's shuffle-map stages
+        val df = spark.range(0, 1000, 1, 4).toDF("id")
+          .select(tick(col("id")).as("id"))
+        val (cut, built) = jobsDuring(Config.cut(df))
+        assert(built === 0, s"building the cut ran $built jobs")
+        assert(acc.value === 0L, "building the cut executed the subtree")
+        // first action: compute, and on the reliable backend the
+        // trailing checkpoint-write job READS the DISK_ONLY copy (the
+        // checkpoint-twice trap was 2× here: 1000 → 2000)
+        assert(cut.count() === 1000L)
+        assert(acc.value === 1000L,
+          s"the first action computed the cut subtree ${acc.value / 1000.0}x")
+        assert(cut.agg(sum(col("id"))).collect().head.getLong(0) === 499500L)
+        assert(acc.value === 1000L, "a second action recomputed the cut subtree")
+        // The job-end listener drops the reliable cut's DISK_ONLY copy
+        // once a job sees the checkpoint written (the write job's own
+        // end event can race the checkpoint's marking) — poll, nudging
+        // the bus with no-op jobs. A localCheckpoint's own blocks are
+        // the cut's data, not a copy.
+        def left = sc.getPersistentRDDs.filter { case (id, r) =>
+          !before(id) && !CheckpointShim.isLocallyCheckpointed(r)
+        }
+        val deadline = System.currentTimeMillis() + 15000
+        while (System.currentTimeMillis() < deadline && left.nonEmpty) {
+          spark.range(1).count(): Unit
+          CheckpointShim.drainListenerBus(sc)
+        }
+        assert(left.isEmpty, s"the cut left persistent RDDs behind: ${left.keySet}")
+        assert(cut.count() === 1000L)
+        assert(acc.value === 1000L)
       }
-      val leaked = sc.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty, s"lazy cut's DISK_ONLY copy not dropped after materialization: $leaked")
-      // and the cut frame still reads blocks, not the subtree
-      assert(cut.count() === 800L)
-      assert(acc.value === 800L)
     }
-  }
-
-  test("SPARK_GRAFT_LINEAGE_CUT parsing: the env contract the sweep mains rely on") {
-    // the parse itself ran at object init from the real env (unset in
-    // tests → LocalCheckpoint default); pin the mapping the mains use
-    def parse(v: Option[String]): Config.LineageCut =
-      v.map(_.toLowerCase) match {
-        case Some("reliablecheckpoint") | Some("reliable") => Config.ReliableCheckpoint
-        case _ => Config.LocalCheckpoint
-      }
-    assert(parse(None) === Config.LocalCheckpoint)
-    assert(parse(Some("reliableCheckpoint")) === Config.ReliableCheckpoint)
-    assert(parse(Some("reliable")) === Config.ReliableCheckpoint)
-    assert(parse(Some("anything-else")) === Config.LocalCheckpoint)
   }
 }
