@@ -8,7 +8,9 @@
 # fails the COMMIT, not the driver round days later.
 # Staged changes under src/main/scala/graft/streaming/ also run
 # StreamingSpec and StreamingRecoverySpec; staged changes to
-# src/main/scala/graft/Config.scala (the lineage cut) run LineageCutSpec.
+# src/main/scala/graft/Config.scala (the lineage cut) run LineageCutSpec,
+# and to src/main/scala/graft/Tables.scala (the partitioning rule)
+# PartitionRuleSpec.
 #
 # Skip (emergencies only): GRAFT_SKIP_GATE=1 git commit ...
 set -uo pipefail
@@ -71,6 +73,16 @@ if git diff --cached --name-only | grep -q '^src/main/scala/graft/Config.scala$'
   if ! sbt -batch "testOnly graft.LineageCutSpec" > "$out/lineage_cut.log" 2>&1; then
     echo "[gate] LINEAGE-CUT SPEC FAILED — tail of $out/lineage_cut.log:"
     tail -20 "$out/lineage_cut.log"
+    exit 1
+  fi
+fi
+# The oracle gate checks results, not partition counts; the
+# partitioning rule's plans live in this spec.
+if git diff --cached --name-only | grep -q '^src/main/scala/graft/Tables.scala$'; then
+  echo "[gate] partitioning-rule spec (log: $out/partition_rule.log)"
+  if ! sbt -batch "testOnly graft.PartitionRuleSpec" > "$out/partition_rule.log" 2>&1; then
+    echo "[gate] PARTITIONING-RULE SPEC FAILED — tail of $out/partition_rule.log:"
+    tail -20 "$out/partition_rule.log"
     exit 1
   fi
 fi

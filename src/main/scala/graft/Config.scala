@@ -91,7 +91,14 @@ object Config {
     * listener drains the pending queue — each entry drops as soon as
     * any job observes its checkpoint materialized. A cut that is never
     * acted on keeps its (empty — nothing computed yet) persist entry;
-    * that is a plan-time registration, not stored blocks. */
+    * that is a plan-time registration, not stored blocks.
+    *
+    * The same listener deletes the context's own checkpoint subdir
+    * (`getCheckpointDir`, the UUID dir Spark made under the configured
+    * one) when the application ends. `cleanCheckpoints` deletes a
+    * checkpoint only once its RDD is garbage-collected, so without
+    * this a reused dir kept the last cuts of every run (8 `rdd-*` dirs
+    * per Verify at sf0.01). */
   private def registerUnpersist(
       spark: SparkSession, persisted: DataFrame, out: DataFrame): Unit = {
     // resolve the RDD on the caller thread (plan-only, runs no job);
@@ -118,6 +125,11 @@ object Config {
               }
             }
           }
+          override def onApplicationEnd(e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+            sc.getCheckpointDir.foreach { d =>
+              val p = new org.apache.hadoop.fs.Path(d)
+              p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+            }
         })
         listenerOn = sc
       }

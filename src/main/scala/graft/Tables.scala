@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 
 /** Loaders for the driver-generated TPC-H-ish star schema + pipeline
   * tables (see TESTDATA.md). One parquet file per table under the
@@ -12,35 +14,50 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** Scale-adaptive scan spread (optimization guide §2.5 "input skew:
-    * one huge unsplittable file — repartition immediately after the
-    * read"): the driver testdata ships each table as ONE parquet row
-    * group, and Spark assigns a whole row group to a single scan task
-    * — so a scan stage (and all the row-local work fused into it:
-    * tokenize/shingle/regex/aggregation-map building) runs on ONE
-    * core of local[N]. Measured before the fix (`Probe jobs`, sf0.1):
-    * q18's partial-agg job was 3.01 s of task time on one working
-    * task; c1's scan+Expand ran 2.2 s single-task.
+  /** Input bytes per partition of per-document work: [[byDoc]] splits
+    * a `documents` frame into ceil(input bytes / B) partitions.
     *
-    * The condition is derived from the data, not a local constant:
-    * repartition to defaultParallelism ONLY when the scan plans fewer
-    * partitions than that — at cluster scale (thousands of row
-    * groups) the condition is false and the ingest is untouched, so
-    * the extra exchange is never paid where the scan is already
-    * parallel. Round-robin repartition is deterministic under retry
-    * (sortBeforeRepartition, SPARK-23207) and every declared query's
-    * result is partition-order-free (decimal sums, total ORDER BY —
-    * SURVEY §6); the full oracle gate re-ran green after the change.
+    * B is the smallest input an exchange pays for. One core does the
+    * per-document work (tokenize, shingle, hash, regex) at c ≈ 0.3 s
+    * per 128 KiB of file bytes; an exchange costs a fixed e ≈ 0.15 s
+    * (its shuffle write and read, one more stage, one more AQE job;
+    * 0.1–0.3 s measured per materialization). Spreading I bytes over
+    * k cores saves c·I·(1 − 1/k). On the least parallel host that
+    * gains (k = 2) that covers e once I ≥ 2e/c = 128 KiB. Measured at
+    * local[4] (`Probe time`, the 14 documents sites, with → without
+    * the exchange): 64 KiB (the sf0.01 and sf0.001 files) lost or
+    * broke even with it, 7.61 → 7.42 s and 2.90 → 2.78 s; 581 KiB
+    * (sf0.1) won by 6 s with it, 13.28 → 16.78 s and 7.42 → 9.90 s. */
+  val DocPartitionBytes: Long = 128L * 1024
+
+  /** THE partitioning rule for per-document work: hash-partition by
+    * `doc_id` into ceil(input bytes / [[DocPartitionBytes]]) partitions.
+    * Nothing else in graft sizes a scan's partitions (i8's bucket
+    * count and m7's `M7Partitions` are fixed constants).
     *
-    * OPT-IN per operator, not applied inside the loaders: the
-    * exchange + 32-task stage costs ~0.1-0.3 s of fixed overhead per
-    * materialization, which a sub-second scan→agg key never earns
-    * back (measured: a global always-on spread regressed the ~150
-    * trivial keys by +0.15-0.4 s each while the heavy keys won). Call
-    * sites that do heavy per-row work over a table opt in. */
-  def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    *  - Input bytes are the summed statistics of the frame's leaf
+    *    relations: the file bytes, known without a job, and the same
+    *    for the raw read and any projection of it. Never
+    *    `rdd.getNumPartitions`: under AQE planning a frame runs its
+    *    shuffle-map stages (see [[Config.cut]]).
+    *  - No exchange when that is one partition, or when the input is
+    *    larger than `spark.sql.files.maxPartitionBytes`: such a scan
+    *    already splits itself.
+    *  - The count is explicit, so AQE does not coalesce the small-bytes
+    *    shuffle back to one partition: the cost downstream is per-row
+    *    CPU, not bytes. By key, so a row's partition depends on the
+    *    data only.
+    *
+    * The numeric tables get no rule: their scan-fused work is cheap
+    * enough per byte that the exchange loses at every testdata scale
+    * but the one-row-group sf0.1 file (measured: the 9 former sites
+    * took 6.93 s with a round-robin spread and 5.67 s without at
+    * sf0.01). */
+  def byDoc(df: DataFrame): DataFrame = {
+    val bytes = df.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
+    val n = (bytes + DocPartitionBytes - 1) / DocPartitionBytes
+    if (n <= 1 || bytes > SQLConf.get.filesMaxPartitionBytes) df
+    else df.repartition(n.toInt, col("doc_id"))
   }
 
   def region(s: SparkSession, dir: String): DataFrame    = s.read.parquet(s"$dir/region.parquet")
@@ -61,7 +78,7 @@ object Tables {
     * ts (SURVEY.md §6.4).
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+    import org.apache.spark.sql.functions.{expr, timestamp_micros}
     import org.apache.spark.sql.types.LongType
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$dir/events.parquet")

@@ -33,10 +33,8 @@ object Cleaning {
   // columns with no common grain, so the only Expand-free exact
   // alternative is one scan PER column. PLANS.md "Round-5 Expand
   // audit".)
-  // r18: spread the scan (one-row-group testdata fused the Expand ×6
-  // partial agg into ONE 2.2 s task — Tables.spread's rationale).
   def c1(s: SparkSession, dir: String): DataFrame =
-    profile(Tables.spread(Tables.orders(s, dir)),
+    profile(Tables.orders(s, dir),
       numCols = Seq("o_orderkey", "o_custkey", "o_totalprice"),
       strCols = Seq("o_orderstatus", "o_orderpriority"),
       exact = true)
@@ -700,9 +698,7 @@ object Cleaning {
   // non-vacuous demonstration; CleaningSpec proves the zero case on
   // planted consistent frames.
   def c17(s: SparkSession, dir: String): DataFrame = {
-    // Tables.spread: the decimal rollup is scan-fused (0.9 s
-    // three-task job measured before the fix)
-    val lt = Tables.spread(Tables.lineitem(s, dir))
+    val lt = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey"))
       .agg(sum(dec2(col("l_extendedprice")) *
         (lit(1).cast(org.apache.spark.sql.types.DecimalType(18, 2)) -
@@ -810,11 +806,6 @@ object Cleaning {
   }
 
   def c18(s: SparkSession, dir: String): DataFrame = {
-    // NO Tables.spread here (r19): the r18 spread regressed c18 at
-    // matched cores on an idle machine (raw 1.40 → 2.12 at c32 vs
-    // r17, the round-18 ADVICE flag) — the key runs FIVE
-    // quantileSketchError sites, so the two spread exchanges fan into
-    // ~25 AQE jobs and fixed per-job overhead swamps the scan win.
     val ev = Tables.events(s, dir)
     val c2dist = ev.filter(col("event_type") =!= "error")
       .select(col("value").as("v"))

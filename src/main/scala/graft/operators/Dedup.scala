@@ -252,9 +252,7 @@ object Dedup {
   // In production the pairs come from minhashCandidatePairs; the
   // Jaccard verify step is identical.
   def d2(s: SparkSession, dir: String): DataFrame = {
-    // Tables.spread: the shingle build is scan-fused (one-row-group
-    // testdata -> single task without it)
-    val d = Tables.spread(Tables.documents(s, dir))
+    val d = Tables.byDoc(Tables.documents(s, dir))
       .select(col("doc_id"), shingles3(tokens(col("text"))).as("sh"))
     val a = d.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
     val b = d.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
@@ -367,7 +365,7 @@ object Dedup {
   // near-dup candidates come from hamming-ball bucketing on hash
   // prefixes, same shape as d3.
   def d4(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.spread(Tables.documents(s, dir)) // scan-fused simhash
+    val d = Tables.byDoc(Tables.documents(s, dir))
       .select(col("doc_id"), simhash16(tokenCodes(col("text"))).as("sim"))
     val a = d.select(col("doc_id").as("doc_a"), col("sim").as("sim_a"))
     val b = d.select(col("doc_id").as("doc_b"), col("sim").as("sim_b"))
@@ -489,9 +487,7 @@ object Dedup {
   // sf0.01). The op every pretraining pipeline runs before an eval is
   // trusted.
   def d6(s: SparkSession, dir: String): DataFrame = {
-    // Tables.spread: the n-gram explode is scan-fused (0.9 s
-    // single-task job measured before the fix)
-    val docs = Tables.spread(Tables.documents(s, dir))
+    val docs = Tables.byDoc(Tables.documents(s, dir))
     val evalDocs = docs.filter(col("source").isin("src0", "src1"))
     val trainDocs = docs.filter(!col("source").isin("src0", "src1"))
     ngramContamination(trainDocs, evalDocs, "text", "doc_id", k = 5)
@@ -532,17 +528,8 @@ object Dedup {
   def d7(s: SparkSession, dir: String): DataFrame = {
     // Sketch ONCE into a narrow (id, sim) frame and materialize it:
     // without the checkpoint each self-join branch re-evaluates the
-    // per-token simhash over the corpus, and without the repartition
-    // the sketch's parallelism is the parquet SPLIT count (a small SF
-    // dir is one file → one core does everything; at cluster scale the
-    // input has thousands of splits and the repartition coalesces into
-    // normal shuffle sizing). The partition count is explicit because
-    // AQE would coalesce a small-bytes shuffle back to one partition —
-    // partition SIZE is the wrong signal when the downstream cost is
-    // per-row CPU (per-token hashing), not bytes. Measured at sf0.1:
-    // 8.1 s → ~0.6 s.
-    val d = Tables.documents(s, dir)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    // per-token simhash over the corpus.
+    val d = Tables.byDoc(Tables.documents(s, dir))
       .select(col("doc_id"), simhash16(tokenCodes(col("text"))).as("sim"))
       .cutLineage()
     val a = d.select(col("doc_id").as("id_a"), col("sim").as("sim_a"))
@@ -593,11 +580,8 @@ object Dedup {
     // its two consumers shuffle on different key sets ((sh) for the
     // join, (sh, doc_id) for countDistinct's partial dedup), so
     // ReuseExchange can NOT serve both and the corpus would be
-    // re-scanned and re-exploded per consumer. The repartition sets
-    // explode parallelism from the split count (one file at small SF)
-    // to the core count.
-    val spans = Tables.documents(s, dir)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    // re-scanned and re-exploded per consumer.
+    val spans = Tables.byDoc(Tables.documents(s, dir))
       .select(col("doc_id"), explode(shinglesAllK(tokens(col("text")), 8)).as("span"))
       .select(col("doc_id"), xxhash64(col("span")).as("sh"))
       .cutLineage()
@@ -641,8 +625,7 @@ object Dedup {
   // final round() is the one step whose tie-breaking diverges between
   // engines (the t10 lesson: 1/128 rounds differently at 6dp).
   def d9(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    val d = Tables.byDoc(Tables.documents(s, dir))
       .select(col("doc_id"),
         shingles3(tokens(col("text"))).as("sh"),
         minhashSignature(shingleCodes(col("text"))).as("sig"))
@@ -696,7 +679,7 @@ object Dedup {
   // DuckDB twin groups raw span strings — identical up to a 64-bit
   // hash collision (~1e-8 at 1M spans), d8's documented discipline.
   def d10(s: SparkSession, dir: String): DataFrame = {
-    val spans = Tables.spread(Tables.documents(s, dir)) // scan-fused shingle explode
+    val spans = Tables.byDoc(Tables.documents(s, dir))
       .select(col("doc_id"),
         explode(array_distinct(shingles3(tokens(col("text"))))).as("span"))
       .select(col("doc_id"), xxhash64(col("span")).as("sh"))
@@ -1617,9 +1600,7 @@ object Dedup {
       k: Int = 8, flagFrac: Double = 0.5): DataFrame = {
     val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"),
       tokens(col(textCol)).as("tk"))
-    val spark = docs.sparkSession
-    val spans = base
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+    val spans = Tables.byDoc(base)
       .select(col("doc_id"),
         posexplode(shinglesAllK(col("tk"), k)).as(Seq("sp0", "span")))
       .select(col("doc_id"), col("sp0"), xxhash64(col("span")).as("sh"))
@@ -2004,7 +1985,7 @@ object Dedup {
   private def ngCode(ng: Column): Column = fingerprint(tokenCodes(ng))
 
   def d19(s: SparkSession, dir: String): DataFrame =
-    bloomAudit(Tables.spread(Tables.documents(s, dir)), Seq("src0", "src1"))
+    bloomAudit(Tables.byDoc(Tables.documents(s, dir)), Seq("src0", "src1"))
 
   /** Library form of the audit (spec entry point for planted corpora):
     * `docs` needs (source, text); sources in `evalSources` are the

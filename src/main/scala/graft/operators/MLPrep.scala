@@ -254,7 +254,7 @@ object MLPrep {
   private val corrCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
   def m5(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.spread(Tables.lineitem(s, dir)) // wide decimal moment aggs are scan-fused
+    val li = Tables.lineitem(s, dir)
     val pairs = for { i <- corrCols.indices; j <- corrCols.indices if i < j }
       yield (corrCols(i), corrCols(j))
     val aggs = Seq(count(lit(1)).as("n")) ++
@@ -628,16 +628,7 @@ object MLPrep {
     import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
     // capped like m7: the CV grid trains 2 points × 3 folds, so an
     // uncapped pass pays 6 linear-in-corpus LBFGS fits
-    // NO Tables.spread here (r19, tried and MEASURED both ways): the
-    // r18 VERDICT asked for concurrent grid training; spreading the
-    // capped sample to 32 partitions REGRESSED m14 2x (9.5 -> 18.6 s
-    // idle c32 bench) — each LBFGS iteration over a ~30k-row cached
-    // fold is sub-millisecond per task, so 32 tasks × ~20 iterations ×
-    // 6 concurrent fits is pure scheduler overhead (guide §2.2's
-    // many-tiny-tasks failure, the mirror image of m7 where the same
-    // spread WINS 1.75x because RF split-finding jobs are heavy).
-    // The win that survives measurement is fitting all 6 fold×grid
-    // models concurrently (setParallelism(6) below, guide §2.6).
+    // the 6 fold×grid models fit concurrently (setParallelism(6) below)
     val li = graft.functions.Sampling.capTrainingSample(
       Tables.lineitem(s, dir)
         .select(col("l_quantity"), col("l_discount"), col("l_tax"),
@@ -777,7 +768,7 @@ object MLPrep {
   // data value (or exactly ON one, computed identically by both
   // engines) — a 1-ulp interpolation divergence can never flip a bin.
   def m17(s: SparkSession, dir: String): DataFrame =
-    quantileBin(Tables.spread(Tables.orders(s, dir)).select(col("o_totalprice")),
+    quantileBin(Tables.orders(s, dir).select(col("o_totalprice")),
       "o_totalprice", nBins = 4, exact = true)
       .withColumnRenamed("avg_value", "avg_price")
 
@@ -1530,7 +1521,7 @@ object MLPrep {
   private val CurveFractions = Seq(10, 25, 50, 100)
 
   def m28(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.spread(Tables.lineitem(s, dir)) // wide curve aggs are scan-fused
+    val li = Tables.lineitem(s, dir)
       .withColumn("is_test", col("l_orderkey") % 5 === 0)
       .withColumn("__h", (col("l_orderkey") * 7 + col("l_linenumber")) % 100)
     def tr(f: Int) = !col("is_test") && col("__h") < f
@@ -1677,7 +1668,7 @@ object MLPrep {
 
   /** m29: 95% bootstrap CI of the mean purchase value. */
   def m29(s: SparkSession, dir: String): DataFrame =
-    bootstrapMeanCi(Tables.spread(Tables.events(s, dir)).filter(col("event_type") === "purchase"),
+    bootstrapMeanCi(Tables.events(s, dir).filter(col("event_type") === "purchase"),
       col("event_id"), col("value"))
 
   val m29Sql: String = {

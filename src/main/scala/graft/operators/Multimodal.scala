@@ -416,18 +416,12 @@ object Multimodal {
             element_at(col("__chars"), i + lit(3))),
         c => c % 4 === 0))
       .otherwise(array().cast("array<bigint>"))
-    // feature extraction is CPU-bound per payload, so it must run at
-    // CLUSTER parallelism, not input-split parallelism (locally: one
-    // single-row-group parquet file = one task). A bare repartition is
-    // not enough — Catalyst pushes the projection below the exchange,
-    // landing the per-payload compute back on the scan task — so the
-    // exchange is pinned with a checkpoint of the raw (id, payload)
-    // pairs, the same bytes the shuffle itself spills. On a cluster
-    // with many splits this is one extra payload write, the standard
-    // price of decoupling decode-bound work from input skew.
-    val sigs = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+    // feature extraction is CPU-bound per payload. A bare repartition
+    // does not spread it — Catalyst pushes the projection below the
+    // exchange, landing the per-payload compute back on the scan task —
+    // so the exchange is pinned with a checkpoint of the raw
+    // (id, payload) pairs, the same bytes the shuffle itself spills.
+    val sigs = Tables.byDoc(Tables.documents(s, dir).select(col("doc_id"), col("text")))
       .cutLineage()
       .select(col("doc_id"), col("text"),
         transform(split(col("text"), ""), ch => ascii(ch).cast("bigint")).as("__chars"))

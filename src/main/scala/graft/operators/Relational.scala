@@ -299,7 +299,7 @@ object Relational {
   // Expand + hash-agg plan, one shuffle; grouping_id() disambiguates
   // real NULLs from subtotal slots in both engines.
   def q17(s: SparkSession, dir: String): DataFrame = {
-    Tables.spread(Tables.lineitem(s, dir)) // cube's Expand x4 is scan-fused
+    Tables.lineitem(s, dir)
       .cube(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n_items"), sumd(col("l_quantity")).as("sum_qty"),
         grouping_id().as("gid"))
@@ -334,11 +334,8 @@ object Relational {
   // run the default. Both engines interpolate at rank q*(n-1)
   // (type-7); round(…,6) absorbs the last-ulp formula difference.
   // Ref: /root/reference/main.py:154-160 (describe() percentiles).
-  // r18: spread the scan (Tables.spread — the testdata's one-row-group
-  // file fused the whole percentile-map build into ONE task: 3.0 s of
-  // task time on one core, measured by `Probe jobs` before the fix).
   def q18(s: SparkSession, dir: String): DataFrame =
-    groupQuantiles(Tables.spread(Tables.lineitem(s, dir)), exact = true)
+    groupQuantiles(Tables.lineitem(s, dir), exact = true)
 
   /** q18's shape as the user-facing operator: per-returnflag price
     * quartiles + median quantity. `exact = false` (the default) is
@@ -1412,7 +1409,7 @@ object Relational {
   // no global sort), tie-broken deterministically on (count, p1, p2).
   def q36(s: SparkSession, dir: String): DataFrame = {
     val maxBasket = 100
-    val baskets = Tables.spread(Tables.lineitem(s, dir)) // scan-fused map side
+    val baskets = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_partkey"))
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(col("l_partkey"))).as("__parts"))

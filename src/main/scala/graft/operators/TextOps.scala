@@ -95,7 +95,7 @@ object TextOps {
   // reordered near-dups that bag-of-words hashing misses), integer
   // arithmetic, identical mod chain in both engines.
   def t4(s: SparkSession, dir: String): DataFrame = {
-    Tables.spread(Tables.documents(s, dir)) // scan-fused fingerprint
+    Tables.byDoc(Tables.documents(s, dir))
       .select(col("doc_id"), fingerprint(tokenCodes(col("text"))).as("fp"))
       .orderBy(col("doc_id"))
   }
@@ -175,10 +175,7 @@ object TextOps {
   }
 
   def t5(s: SparkSession, dir: String): DataFrame = {
-    // Tables.spread: the regex redaction passes are scan-fused and the
-    // one-row-group testdata pins them to a single task (two 0.7 s
-    // single-task jobs measured by `Probe jobs` before the fix)
-    val seeded = Tables.spread(Tables.documents(s, dir)).withColumn("t",
+    val seeded = Tables.byDoc(Tables.documents(s, dir)).withColumn("t",
       concat(col("text"), lit(" contact user"), col("doc_id"),
         lit("@example.com or 555-123-"),
         lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
@@ -515,11 +512,6 @@ object TextOps {
   // by construction. Ties on the max count break lexicographically so
   // both engines pick the same token.
   def t9(s: SparkSession, dir: String): DataFrame = {
-    // NO Tables.spread here (r19): the r18 spread regressed t9 at
-    // matched cores on an idle machine (raw 1.01 → 1.85 at c32 vs
-    // r17) — the two consumers (token counts, trigram agg) each add
-    // an AQE stage behind the repartition and the per-job overhead
-    // outweighs the single-task scan it fixes at this shape.
     val docs = Tables.documents(s, dir)
     val tc = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt"))
@@ -1135,11 +1127,6 @@ object TextOps {
   // distinct terms, never a corpus aggregate. A stopword-ish hot term
   // fans out per (doc, term) ROW — linear, no quadratic blowup exists.
   def t16(s: SparkSession, dir: String): DataFrame = {
-    // NO Tables.spread here (r19): the r18 spread regressed t16 3× at
-    // matched cores on an idle machine (raw 0.76 → 2.35 at c32 vs
-    // r17) — tf feeds two consumers, so the spread exchange and its
-    // extra AQE stages run in both branches and the job-count overhead
-    // dominates the single-task scan it was meant to fix.
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
     val tf = toks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))

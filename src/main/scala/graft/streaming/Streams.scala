@@ -1032,8 +1032,7 @@ object Streams {
   // testdata head == any-member exactly (StreamingSpec proves it
   // against [[st16PairExact]], the spec-only pair-exact reference).
   def st16(s: SparkSession, dir: String): DataFrame =
-    // Tables.spread: band keys + shingles are scan-fused (st21's rationale)
-    Sinks.rebuild(new DedupAdmissionSink(_), graft.Tables.spread(
+    Sinks.rebuild(new DedupAdmissionSink(_), graft.Tables.byDoc(
         Tables.documents(s, dir).select(col("doc_id"), col("text"))))
       .orderBy(col("doc_id"))
 
@@ -1445,9 +1444,7 @@ object Streams {
 
   /** st21 batch twin: the curate step over the whole corpus as one batch. */
   def st21(s: SparkSession, dir: String): DataFrame =
-    // Tables.spread: the gate flags (tokenize/quality/lang + md5) are
-    // scan-fused — single-task on the one-row-group testdata
-    Sinks.rebuild(new CurateSink(_), graft.Tables.spread(
+    Sinks.rebuild(new CurateSink(_), graft.Tables.byDoc(
         Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text"))))
       .orderBy(col("doc_id"))
 

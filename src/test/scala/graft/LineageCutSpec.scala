@@ -90,6 +90,20 @@ class LineageCutSpec extends SparkSuite {
     }
   }
 
+  test("application end deletes the context's own checkpoint subdir and nothing beside it") {
+    withCheckpointDir { dir =>
+      val sibling = new File(dir, "keep.txt")
+      java.nio.file.Files.writeString(sibling.toPath, "not Spark's")
+      assert(Config.cut(spark.range(0, 100, 1, 4).toDF("id")).count() === 100L)
+      val own = new File(new java.net.URI(sc.getCheckpointDir.get))
+      assert(own.getParentFile.getCanonicalFile === dir.getCanonicalFile)
+      assert(files(own).nonEmpty, s"the cut wrote nothing under $own")
+      CheckpointShim.postApplicationEnd(sc)
+      assert(!own.exists(), s"$own outlived the application")
+      assert(sibling.exists(), "a file beside the context's subdir was deleted")
+    }
+  }
+
   test("cut() is semantics-neutral and PLAN-EQUAL across backends: both truncate to the same leaf shape") {
     val df = Tables.documents(spark, sf)
       .select(col("doc_id"), length(col("text")).as("len"))
