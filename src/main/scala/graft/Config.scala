@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The lineage cut: every multi-consumer frontier in the batch
@@ -56,6 +59,7 @@ object Config {
   def cut(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty) df.localCheckpoint(eager = false)
     else {
+      checkpointDirCleaner(df.sparkSession.sparkContext).note()
       val persisted = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val out = persisted.checkpoint(eager = false)
       registerUnpersist(df.sparkSession, persisted, out)
@@ -91,14 +95,7 @@ object Config {
     * listener drains the pending queue — each entry drops as soon as
     * any job observes its checkpoint materialized. A cut that is never
     * acted on keeps its (empty — nothing computed yet) persist entry;
-    * that is a plan-time registration, not stored blocks.
-    *
-    * The same listener deletes the context's own checkpoint subdir
-    * (`getCheckpointDir`, the UUID dir Spark made under the configured
-    * one) when the application ends. `cleanCheckpoints` deletes a
-    * checkpoint only once its RDD is garbage-collected, so without
-    * this a reused dir kept the last cuts of every run (8 `rdd-*` dirs
-    * per Verify at sf0.01). */
+    * that is a plan-time registration, not stored blocks. */
   private def registerUnpersist(
       spark: SparkSession, persisted: DataFrame, out: DataFrame): Unit = {
     // resolve the RDD on the caller thread (plan-only, runs no job);
@@ -125,15 +122,33 @@ object Config {
               }
             }
           }
-          override def onApplicationEnd(e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            sc.getCheckpointDir.foreach { d =>
-              val p = new org.apache.hadoop.fs.Path(d)
-              p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-            }
         })
         listenerOn = sc
       }
     }
+  }
+
+  /** Deletes, when the application ends, each checkpoint subdir its
+    * context cut to and its current one: the UUID dirs Spark makes
+    * under the configured dir, nothing beside them. `cleanCheckpoints`
+    * deletes a checkpoint only once its RDD is garbage-collected, so
+    * without this a reused dir kept the last cuts of every run (8
+    * `rdd-*` dirs per Verify at sf0.01). One per context, registered
+    * by [[Sessions.local]] (a run with a dir and no cut still has a
+    * subdir) or else by the first reliable cut; every reliable cut
+    * notes its dir. */
+  private[graft] final class CheckpointDirCleaner(val sc: SparkContext) extends SparkListener {
+    private val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def note(): Unit = sc.getCheckpointDir.foreach(dirs.add)
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+      note()
+      dirs.forEach(d => new Path(d).getFileSystem(sc.hadoopConfiguration).delete(new Path(d), true))
+    }
+  }
+  @volatile private var cleaner: CheckpointDirCleaner = null
+  private[graft] def checkpointDirCleaner(sc: SparkContext): CheckpointDirCleaner = synchronized {
+    if (cleaner == null || (cleaner.sc ne sc)) { cleaner = new CheckpointDirCleaner(sc); sc.addSparkListener(cleaner) }
+    cleaner
   }
 
   /** Postfix form: `frame.cutLineage()`. */

@@ -107,6 +107,7 @@ object Sessions {
       .config("spark.ui.enabled", ui.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    Config.checkpointDirCleaner(s.sparkContext)
     s
   }
 }

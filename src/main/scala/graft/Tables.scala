@@ -40,9 +40,12 @@ object Tables {
     *    for the raw read and any projection of it. Never
     *    `rdd.getNumPartitions`: under AQE planning a frame runs its
     *    shuffle-map stages (see [[Config.cut]]).
-    *  - No exchange when that is one partition, or when the input is
-    *    larger than `spark.sql.files.maxPartitionBytes`: such a scan
-    *    already splits itself.
+    *  - No exchange (`df` itself comes back) when that is one
+    *    partition, or when the input is larger than
+    *    `spark.sql.files.maxPartitionBytes`: such a file scan splits at
+    *    row groups (one row group still reads as one task). A leaf of
+    *    unknown size, like `createDataFrame(rdd)`'s LogicalRDD, reports
+    *    Spark's default size, far above that, so it gets none either.
     *  - The count is explicit, so AQE does not coalesce the small-bytes
     *    shuffle back to one partition: the cost downstream is per-row
     *    CPU, not bytes. By key, so a row's partition depends on the

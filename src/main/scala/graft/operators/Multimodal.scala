@@ -419,10 +419,11 @@ object Multimodal {
     // feature extraction is CPU-bound per payload. A bare repartition
     // does not spread it — Catalyst pushes the projection below the
     // exchange, landing the per-payload compute back on the scan task —
-    // so the exchange is pinned with a checkpoint of the raw
+    // so an exchange byDoc adds is pinned with a checkpoint of the raw
     // (id, payload) pairs, the same bytes the shuffle itself spills.
-    val sigs = Tables.byDoc(Tables.documents(s, dir).select(col("doc_id"), col("text")))
-      .cutLineage()
+    val raw = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    val spread = Tables.byDoc(raw)
+    val sigs = (if (spread eq raw) raw else spread.cutLineage())
       .select(col("doc_id"), col("text"),
         transform(split(col("text"), ""), ch => ascii(ch).cast("bigint")).as("__chars"))
       .select(col("doc_id"), grams.as("__codes"))

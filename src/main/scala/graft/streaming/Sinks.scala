@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Config.CutOps
 import graft.functions.TextFunctions.{shingles3, tokens}
 import graft.operators.{Dedup, Upsert}
 
@@ -193,9 +194,13 @@ class DedupAdmissionSink(state: SinkState, tau: Double = Dedup.IncTau,
         .select(col("doc_id").as("id"), col("sh"))
         .join(heads.select(col("m").as("id")).distinct(), Seq("id"), "left_semi"))
     }
-    val keysB = Dedup.bandKeys(batch, "text", "doc_id")
+    // each cut once: the bucket heads and the candidate join read the
+    // band keys on different exchanges, and pairJaccard joins the
+    // shingles twice on the doc_id the batch is already partitioned by
+    val keysB = Dedup.bandKeys(batch, "text", "doc_id").cutLineage()
     val minB = keysB.transform(Dedup.bucketHeads)
     val shB = batch.select(col("doc_id").as("id"), shingles3(tokens(col("text"))).as("sh"))
+      .cutLineage()
     val probe = st.get("index").orElse(boot.map(_._1))
       .fold(minB)(_.unionByName(minB).transform(Dedup.bucketHeadsMerge))
     val allSh = st.get("shstore").orElse(boot.map(_._2)).fold(shB)(_.unionByName(shB))
@@ -231,8 +236,11 @@ class CurateSink(state: SinkState, tau: Double = Dedup.IncTau) extends Sink(stat
   private val sumTaken = (df: DataFrame) =>
     df.groupBy(col("source")).agg(sum(col("tok_seen")).as("tok_seen"))
   def step(batch: DataFrame, st: Map[String, DataFrame], ordinal: Long) = {
+    // cut once: over a doc_id-partitioned batch the joins on doc_id
+    // plan no exchange for ReuseExchange to share, so each branch
+    // recomputed tokenize, quality, language and md5 over the text
     val flagged = Streams.curateRowFlags(
-      batch.select(col("doc_id"), col("source"), col("text")))
+      batch.select(col("doc_id"), col("source"), col("text"))).cutLineage()
     val g = flagged.filter(col("gate_ok"))
     val keep = flagged.join(g.select(col("__h"), col("doc_id").as("__kid"))
       .groupBy(col("__h")).agg(min(col("__kid")).as("__keep")), Seq("__h"), "left")
@@ -245,9 +253,11 @@ class CurateSink(state: SinkState, tau: Double = Dedup.IncTau) extends Sink(stat
         .withColumn("exact_ok", exact && col("__seen").isNull).drop("__seen")
     }).drop("__keep")
     val surv = f2.filter(col("exact_ok")).select(col("doc_id"), col("text"))
-    val keysB = Dedup.bandKeys(surv, "text", "doc_id")
+    // the band keys and shingles are cut as in DedupAdmissionSink
+    val keysB = Dedup.bandKeys(surv, "text", "doc_id").cutLineage()
     val minB = keysB.transform(Dedup.bucketHeads)
     val shB = surv.select(col("doc_id").as("id"), shingles3(tokens(col("text"))).as("sh"))
+      .cutLineage()
     val probe = st.get("index")
       .fold(minB)(_.unionByName(minB).transform(Dedup.bucketHeadsMerge))
     val allSh = st.get("shstore").fold(shB)(_.unionByName(shB))

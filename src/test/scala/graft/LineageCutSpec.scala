@@ -3,7 +3,7 @@ package graft
 import java.io.File
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.CheckpointShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -90,17 +90,27 @@ class LineageCutSpec extends SparkSuite {
     }
   }
 
-  test("application end deletes the context's own checkpoint subdir and nothing beside it") {
+  test("application end deletes every checkpoint subdir the context cut to and nothing beside them") {
     withCheckpointDir { dir =>
       val sibling = new File(dir, "keep.txt")
       java.nio.file.Files.writeString(sibling.toPath, "not Spark's")
-      assert(Config.cut(spark.range(0, 100, 1, 4).toDF("id")).count() === 100L)
-      val own = new File(new java.net.URI(sc.getCheckpointDir.get))
-      assert(own.getParentFile.getCanonicalFile === dir.getCanonicalFile)
-      assert(files(own).nonEmpty, s"the cut wrote nothing under $own")
-      CheckpointShim.postApplicationEnd(sc)
-      assert(!own.exists(), s"$own outlived the application")
-      assert(sibling.exists(), "a file beside the context's subdir was deleted")
+      // each setCheckpointDir makes a new subdir: the second one stands
+      // for a dir changed mid-application
+      val own = (1 to 2).map { _ =>
+        sc.setCheckpointDir(dir.toString)
+        assert(Config.cut(spark.range(0, 100, 1, 4).toDF("id")).count() === 100L)
+        new File(new java.net.URI(sc.getCheckpointDir.get))
+      }
+      assert(own.distinct.size === 2)
+      own.foreach { d =>
+        assert(d.getParentFile.getCanonicalFile === dir.getCanonicalFile)
+        assert(files(d).nonEmpty, s"the cut wrote nothing under $d")
+      }
+      // the handler alone: an application-end event on the shared
+      // context would mark the application finished for every suite
+      Config.checkpointDirCleaner(sc).onApplicationEnd(SparkListenerApplicationEnd(0L))
+      own.foreach(d => assert(!d.exists(), s"$d outlived the application"))
+      assert(sibling.exists(), "a file beside the context's subdirs was deleted")
     }
   }
 

@@ -40,4 +40,16 @@ class PartitionRuleSpec extends SparkSuite {
     assert(docExchange(Tables.byDoc(docs)) === (Seq("doc_id"), want))
     assert(docExchange(Tables.byDoc(docs.select(col("doc_id"), col("text")))) === (Seq("doc_id"), want))
   }
+
+  test("input larger than spark.sql.files.maxPartitionBytes gets no exchange: the scan splits itself") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val bytes = new File(s"$sf01/documents.parquet").length()
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, (bytes - 1).toString)
+    try {
+      val docs = Tables.documents(spark, sf01)
+      assert(Tables.byDoc(docs) eq docs)
+      assert(exchanges(Tables.byDoc(docs.select(col("doc_id"), col("text")))).isEmpty)
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

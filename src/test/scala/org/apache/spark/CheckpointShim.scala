@@ -1,7 +1,6 @@
 package org.apache.spark
 
 import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
-import org.apache.spark.scheduler.SparkListenerApplicationEnd
 
 /** Test-only reach into Spark internals the lineage-cut spec needs.
   * Spark lets a session set its checkpoint dir but not clear it: the
@@ -15,13 +14,6 @@ object CheckpointShim {
 
   /** Block until every event posted so far reached every listener. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-
-  /** Deliver an application-end event to every listener, as
-    * `SparkContext.stop` does, without stopping the shared context. */
-  def postApplicationEnd(sc: SparkContext): Unit = {
-    sc.listenerBus.post(SparkListenerApplicationEnd(System.currentTimeMillis()))
-    drainListenerBus(sc)
-  }
 
   def isLocallyCheckpointed(rdd: RDD[_]): Boolean =
     rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])
